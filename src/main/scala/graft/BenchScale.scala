@@ -2,7 +2,6 @@ package graft
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.sql.SparkSession
 
 /** Scale-slope bench: run the PLANS.md scale exemplars at sf0.1 AND the
   * derived sf1.0 ([[ScaleUp]]) and record the per-query runtime ratio.
@@ -66,18 +65,7 @@ object BenchScale {
     require(Files.exists(Paths.get(s"$sf10/_SUCCESS_SCALEUP")),
       s"run `runMain graft.ScaleUp` first — no derived dataset at $sf10")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // plan-string rendering is billed on EVERY action (the SQL
-      // listener event; AQE re-posts per stage): "simple" renders the
-      // bare tree instead of formatted per-node detail — observed 18
-      // driver-minutes of tree-regex rendering at sf10 without it
-      .config("spark.sql.ui.explainMode", "simple")
-      .getOrCreate()
+    val spark = GraftSession.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def num(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))

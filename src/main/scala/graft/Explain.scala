@@ -1,23 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump formatted physical plans for the headline queries — the
   * shuffle/broadcast/pushdown review loop (run after operator changes).
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // plan-string rendering is billed on EVERY action (the SQL
-      // listener event; AQE re-posts per stage): "simple" renders the
-      // bare tree instead of formatted per-node detail — observed 18
-      // driver-minutes of tree-regex rendering at sf10 without it
-      .config("spark.sql.ui.explainMode", "simple")
-      .getOrCreate()
+    val spark = GraftSession.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val names =
       if (args.nonEmpty) args.toSeq

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Derive an sf1.0 dataset from the driver's sf0.1 parquet — the 10×
@@ -57,17 +57,7 @@ object ScaleUp {
       println(s"""{"scaleup":"cached","dst":"$dst"}""")
       return
     }
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // plan-string rendering is billed on EVERY action (the SQL
-      // listener event; AQE re-posts per stage): "simple" renders the
-      // bare tree instead of formatted per-node detail — observed 18
-      // driver-minutes of tree-regex rendering at sf10 without it
-      .config("spark.sql.ui.explainMode", "simple")
-      .getOrCreate()
+    val spark = GraftSession.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val t = Tables(spark, src)
 

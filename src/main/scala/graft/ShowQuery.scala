@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Run named SparkEntry queries against a data dir and PRINT the rows —
   * the measurement-harness runner for queries whose ANSWER is the
   * deliverable (recall grades, drift diagnostics) at scales the timed
@@ -14,18 +12,7 @@ object ShowQuery {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ShowQuery <sfDir> <query...>")
     val sfDir = args(0)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // plan-string rendering is billed on EVERY action (the SQL
-      // listener event; AQE re-posts per stage): "simple" renders the
-      // bare tree instead of formatted per-node detail — observed 18
-      // driver-minutes of tree-regex rendering at sf10 without it
-      .config("spark.sql.ui.explainMode", "simple")
-      .getOrCreate()
+    val spark = GraftSession.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     args.drop(1).foreach { name =>
       val t0 = System.nanoTime()

@@ -8,6 +8,8 @@ import org.apache.spark.sql.SparkSession
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
+    // deliberately not GraftSession: a plain session without
+    // nanosAsLong is what proves Tables sets it defensively
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.ui.enabled", "false")

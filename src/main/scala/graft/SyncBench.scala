@@ -2,7 +2,7 @@ package graft
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.sources.{AtomicTable, Warehouse}
@@ -34,18 +34,7 @@ object SyncBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse(".scaledata/sf1.0")
     val out = args.lift(1).getOrElse("SYNC_BENCH.json")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // plan-string rendering is billed on EVERY action (the SQL
-      // listener event; AQE re-posts per stage): "simple" renders the
-      // bare tree instead of formatted per-node detail — observed 18
-      // driver-minutes of tree-regex rendering at sf10 without it
-      .config("spark.sql.ui.explainMode", "simple")
-      .getOrCreate()
+    val spark = GraftSession.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def num(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))

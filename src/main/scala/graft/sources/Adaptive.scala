@@ -1,6 +1,9 @@
 package graft.sources
 
-import java.nio.file.{Files, Path}
+import java.io.IOException
+import java.nio.file.{FileVisitResult, Files, NoSuchFileException, Path,
+  SimpleFileVisitor}
+import java.nio.file.attribute.BasicFileAttributes
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -20,43 +23,52 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * [[withTinyPlan]] therefore disables AQE around a verb's plan
   * executions ONLY when the bytes the verb can possibly touch are
-  * provably under [[minBytes]] (default 256 MB, configurable via
-  * `spark.graft.adaptive.minBytes`): the on-disk size of the table or
-  * index tree it reads (short-circuit-walked, so a 100 TB tree stops
-  * at the cap instead of listing it) plus Catalyst's size estimate of
-  * the caller's batch plan. Above the threshold nothing changes — big
-  * commits keep AQE and all its protections, so this is a
-  * small-input fast path, not a local-mode tuning.
+  * provably under [[MinBytes]] (256 MB): the on-disk size of the
+  * table or index tree it reads (short-circuit-walked, so a 100 TB
+  * tree stops at the cap instead of listing it) plus Catalyst's size
+  * estimate of the caller's batch plan. Above the threshold nothing
+  * changes — big commits keep AQE and all its protections, so this is
+  * a small-input fast path, not a local-mode tuning.
   */
 object Adaptive {
 
   /** Byte threshold below which a maintenance verb's plans run
-    * without AQE. 256 MB default: below one advisory partition size
+    * without AQE. 256 MB: below one advisory partition size
     * (`spark.sql.adaptive.advisoryPartitionSizeInBytes`-scale), every
     * shuffle inside the verb fits a single post-coalesce partition —
     * exactly the regime where AQE's per-stage jobs buy nothing.
     */
-  def minBytes(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.adaptive.minBytes")
-      .map(_.toLong).getOrElse(256L * 1024 * 1024)
+  private[sources] val MinBytes: Long = 256L * 1024 * 1024
 
   /** Recursive on-disk byte size of `path`, short-circuited once the
     * running sum crosses `cap` — the gate only needs "tiny or not",
     * never an exact total, so a huge tree costs a bounded walk.
-    * Missing paths count 0 (an uninitialized table is tiny).
+    * Missing paths count 0 (an uninitialized table is tiny), and so
+    * does an entry a concurrent sweep, reaper or compaction removes
+    * mid-walk: it holds no bytes any more, and the walk goes on.
     */
   def dirBytesAtMost(path: String, cap: Long): Long = {
     val p = Path.of(path)
     if (!Files.isDirectory(p)) return 0L
     var sum = 0L
-    val walk = Files.walk(p)
-    try {
-      val it = walk.iterator()
-      while (it.hasNext && sum <= cap) {
-        val f = it.next()
-        if (Files.isRegularFile(f)) sum += Files.size(f)
+    def vanished(e: IOException): FileVisitResult = e match {
+      case null | _: NoSuchFileException => FileVisitResult.CONTINUE
+      case _ => throw e
+    }
+    Files.walkFileTree(p, new SimpleFileVisitor[Path] {
+      override def visitFile(f: Path,
+                             a: BasicFileAttributes): FileVisitResult = {
+        if (a.isRegularFile) sum += a.size
+        if (sum > cap) FileVisitResult.TERMINATE
+        else FileVisitResult.CONTINUE
       }
-    } finally walk.close()
+      override def visitFileFailed(f: Path,
+                                   e: IOException): FileVisitResult =
+        vanished(e)
+      override def postVisitDirectory(d: Path,
+                                      e: IOException): FileVisitResult =
+        vanished(e)
+    })
     sum
   }
 
@@ -75,13 +87,11 @@ object Adaptive {
   private val AqeKey = "spark.sql.adaptive.enabled"
 
   /** Target bytes per shuffle partition for stateful streams (state
-    * stores scale 1:1 with shuffle partitions). Default 64 MB — the
+    * stores scale 1:1 with shuffle partitions). 64 MB — the
     * AQE advisory-partition scale AQE itself cannot apply here,
     * because stateful streaming disables it.
     */
-  def streamPartitionBytes(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.stream.partitionBytes")
-      .map(_.toLong).getOrElse(64L * 1024 * 1024)
+  private val StreamPartitionBytes: Long = 64L * 1024 * 1024
 
   /** Session for a stateful micro-batch stream reading a landing
     * DIRECTORY: `spark.sql.shuffle.partitions` — which for a stateful
@@ -100,7 +110,7 @@ object Adaptive {
     */
   def streamSession(spark: SparkSession, landingDir: String): SparkSession = {
     val cur = spark.sessionState.conf.numShufflePartitions
-    val per = streamPartitionBytes(spark)
+    val per = StreamPartitionBytes
     val bytes = dirBytesAtMost(landingDir, per.toLong * cur)
     val k = math.max(1L, math.min(cur.toLong, (bytes + per - 1) / per)).toInt
     if (k >= cur) spark
@@ -117,7 +127,7 @@ object Adaptive {
     * scaled to the input (one partition per 32 MB, floor 1) iff
     * `approxBytes` (evaluated lazily — skipped entirely when AQE is
     * already off, e.g. a verb nested inside an already-gated sync)
-    * stays under [[minBytes]]. Both knobs follow the same guide-§2
+    * stays under [[MinBytes]]. Both knobs follow the same guide-§2
     * rule — partitioning follows DATA SIZE: below the threshold every
     * shuffle inside the verb fits a handful of in-memory partitions,
     * so per-stage jobs (AQE) and per-task dispatch (a full session's
@@ -129,7 +139,7 @@ object Adaptive {
   def withTinyPlan[A](spark: SparkSession, approxBytes: => Long)(f: => A): A = {
     val prev = spark.conf.getOption(AqeKey).getOrElse("true")
     val bytes = if (prev == "false") Long.MaxValue else approxBytes
-    if (bytes >= minBytes(spark)) f
+    if (bytes >= MinBytes) f
     else {
       val prevShuf = spark.conf.getOption(ShufKey).getOrElse("200")
       val k = math.max(1L, bytes / (32L * 1024 * 1024) + 1)

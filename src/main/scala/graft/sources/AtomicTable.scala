@@ -13,10 +13,9 @@ import graft.operators.Relational
 /** Atomic, versioned table-of-record over any schema, partitioned by
   * `partCol` and keyed by `defaultKeys`.
   *
-  * An in-place partitioned layout ([[Warehouse.upsertPrices]] /
-  * [[Warehouse.deleteWherePrices]]) mutates partition directories
-  * directly: a crash between the directory delete and the re-append
-  * loses committed rows. The reference gets mutation atomicity for free
+  * A layout that mutates partition directories in place is not
+  * crash-atomic: a crash between the directory delete and the
+  * re-append loses committed rows. The reference gets mutation atomicity for free
   * from SQLite transactions (/root/reference/app/db.py:23-30); at
   * 100 TB the equivalent is a manifest commit protocol, which this
   * class implements:
@@ -403,14 +402,14 @@ final case class AtomicTable(spark: SparkSession, root: String,
 
   /** Tiny-commit fast path (guide §2): a mutation's plans are bounded
     * by this table's on-disk tree plus the caller's batch — when both
-    * are provably under [[Adaptive.minBytes]], run the commit without
+    * are provably under [[Adaptive.MinBytes]], run the commit without
     * AQE (whose per-exchange stage jobs dominate KB-scale commits; see
     * [[Adaptive.withTinyPlan]]). Large tables or batches are
     * untouched.
     */
   private def withTinyCommit[A](batch: Option[DataFrame])(f: => A): A =
     Adaptive.withTinyPlan(spark, {
-      val cap = Adaptive.minBytes(spark)
+      val cap = Adaptive.MinBytes
       Adaptive.dirBytesAtMost(root, cap) +
         batch.map(Adaptive.planBytes).getOrElse(0L)
     })(f)

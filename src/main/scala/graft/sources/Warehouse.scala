@@ -3,32 +3,19 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Relational
-
-/** Physical table layout for the engine's tables-of-record — the piece
-  * the reference delegates to a single SQLite file
-  * (/root/reference/app/db.py:23-30) and we design for a cluster:
+/** Physical layouts beside the engine's tables-of-record:
   *
-  *  - `prices` partitioned by `symbol`: every per-symbol query (the
-  *    dominant access path — quotes, series analytics, watchlist) prunes
-  *    to one directory; ingest appends only to the touched partitions.
   *  - fact tables bucketed by join key: co-located, shuffle-free joins
   *    between tables bucketed on the same key/count (requires the
-  *    catalog, i.e. `saveAsTable`).
+  *    catalog, i.e. `saveAsTable`). At 100 TB bucketing removes the
+  *    fact-to-fact shuffle entirely.
+  *  - the cell-partitioned IVF / IVF-PQ embedding indexes, with their
+  *    delta, tombstone, snapshot, compaction and change-feed sync verbs.
   *
-  * At 100 TB: symbol-partitioning bounds any single query's scan to its
-  * key's share; bucketing removes the fact-to-fact shuffle entirely.
+  * The prices table-of-record is [[PriceTable]], an [[AtomicTable]]
+  * keyed by [[PriceKeys]]; this object only names that merge key.
   */
 object Warehouse {
-
-  /** Write `prices` partitioned by symbol. */
-  def writePrices(prices: DataFrame, root: String,
-                  mode: SaveMode = SaveMode.Overwrite): Unit =
-    prices.write.mode(mode).partitionBy("symbol")
-      .parquet(s"$root/prices")
-
-  def readPrices(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(s"$root/prices")
 
   /** Register a bucketed table-of-record (catalog-backed; both sides of
     * a co-located join must share bucket column and count).
@@ -53,103 +40,6 @@ object Warehouse {
     * UNIQUE(symbol, as_of, source) (/root/reference/app/db.py:44).
     */
   val PriceKeys: Seq[String] = Seq("symbol", "as_of", "source")
-
-  /** Existing-side scan pruned to the partitions the batch touches.
-    * The batch's distinct symbols are collected driver-side — an ingest
-    * batch is watchlist-sized (the reference polls a handful of symbols),
-    * so the list is tiny — and pushed as `symbol IN (...)`, which
-    * Catalyst turns into PartitionFilters: the merge reads only the
-    * touched directories, never the whole table-of-record.
-    */
-  def prunedExisting(spark: SparkSession, root: String,
-                     batch: DataFrame): DataFrame = {
-    val syms = batch.select("symbol").distinct()
-      .collect().map(_.getString(0)).toSeq
-    readPrices(spark, root).filter(col("symbol").isin(syms: _*))
-  }
-
-  /** Partition-pruned `INSERT OR IGNORE` into the symbol-partitioned
-    * prices table (/root/reference/app/db.py:244-261): anti-join the
-    * batch against only the touched partitions, append survivors to
-    * their directories. Returns the inserted rowcount (the reference's
-    * 0/1 contract generalized to batches). Unlike the in-memory
-    * `Relational.insertIgnore`, nothing outside the batch's symbols is
-    * ever read or rewritten.
-    */
-  def insertIgnorePrices(spark: SparkSession, root: String,
-                         batch: DataFrame,
-                         keys: Seq[String] = PriceKeys): Long = {
-    val existing = prunedExisting(spark, root, batch)
-    val fresh = batch.dropDuplicates(keys)
-      .join(existing.select(keys.map(col): _*), keys, "left_anti")
-      .select(existing.columns.map(col): _*) // table column order
-      .persist()
-    val inserted = fresh.count()
-    if (inserted > 0)
-      fresh.write.mode(SaveMode.Append).partitionBy("symbol")
-        .parquet(s"$root/prices")
-    fresh.unpersist(blocking = false)
-    inserted
-  }
-
-  /** Partition-pruned keyed upsert (/root/reference/app/db.py:166-201):
-    * merge the batch into only the touched partitions and rewrite just
-    * those directories via dynamic partition overwrite. The merged rows
-    * stage through a scratch directory first — Spark refuses to
-    * overwrite a path that feeds the same plan, and at scale the staging
-    * write doubles as the shuffle barrier between read and rewrite.
-    *
-    * NOTE: the in-place rewrite is NOT crash-atomic (a failure inside
-    * the dynamic overwrite can leave a partition half-replaced). For a
-    * table-of-record, use [[PriceTable]] — same pruned merge, committed
-    * via staged immutable dirs + an atomic manifest rename.
-    */
-  @deprecated("not crash-atomic; use PriceTable.upsert (same pruned " +
-    "merge, committed via staged immutable dirs + manifest rename)", "r6")
-  def upsertPrices(spark: SparkSession, root: String, batch: DataFrame,
-                   keys: Seq[String] = PriceKeys): Unit = {
-    val existing = prunedExisting(spark, root, batch)
-    val merged = Relational.upsert(existing,
-      batch.select(existing.columns.map(col): _*), keys)
-    val staging =
-      s"$root/.prices_staging_${java.util.UUID.randomUUID().toString.take(8)}"
-    merged.write.mode(SaveMode.Overwrite).parquet(staging)
-    spark.read.parquet(staging)
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("symbol")
-      .parquet(s"$root/prices")
-    deleteRecursively(new java.io.File(staging))
-  }
-
-  /** Compact the small files that per-batch appends accumulate: rewrite
-    * only the named symbols' directories (all symbols when empty),
-    * coalescing each partition's rows into files of up to
-    * `maxRecordsPerFile`. At 100 TB the file count — not the byte count —
-    * is what degrades scan planning (footer reads, task granularity), so
-    * compaction is a first-class maintenance op; run it partition-pruned
-    * on the symbols the ingest touched.
-    */
-  def compactPrices(spark: SparkSession, root: String,
-                    symbols: Seq[String] = Nil,
-                    maxRecordsPerFile: Long = 1000000L): Unit = {
-    val all = readPrices(spark, root)
-    val touched =
-      if (symbols.isEmpty) all
-      else all.filter(col("symbol").isin(symbols: _*))
-    val staging =
-      s"$root/.prices_staging_${java.util.UUID.randomUUID().toString.take(8)}"
-    touched.coalesce(
-        math.max(1, spark.sparkContext.defaultParallelism / 2))
-      .write.mode(SaveMode.Overwrite).parquet(staging)
-    spark.read.parquet(staging)
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy("symbol")
-      .parquet(s"$root/prices")
-    deleteRecursively(new java.io.File(staging))
-  }
 
   /** Index-version indirection for the PQ/cell index family: when
     * `root/CURRENT` exists, every index path — base layout, centroid
@@ -438,7 +328,7 @@ object Warehouse {
     // plans touch the index tree + the batch — AQE's per-stage jobs
     // are pure overhead when both are provably small
     Adaptive.withTinyPlan(spark, {
-      val cap = Adaptive.minBytes(spark)
+      val cap = Adaptive.MinBytes
       Adaptive.dirBytesAtMost(r, cap) + Adaptive.planBytes(batch)
     }) {
     val cents = readEmbeddingCentroids(r)
@@ -550,7 +440,7 @@ object Warehouse {
     // tiny-handoff fast path (guide §2): everything the export scans
     // is the pinned table tree — see [[Adaptive.withTinyPlan]]
     Adaptive.withTinyPlan(spark,
-      Adaptive.dirBytesAtMost(tbl.root, Adaptive.minBytes(spark))) {
+      Adaptive.dirBytesAtMost(tbl.root, Adaptive.MinBytes)) {
     val snap = tbl.readVersion(version)
     snap.withColumn("shard",
         graft.functions.MarketFunctions.md5Hash60(
@@ -616,7 +506,7 @@ object Warehouse {
     // tiny-handoff fast path: the verify + restore scans are bounded
     // by the export dir and the destination tree
     Adaptive.withTinyPlan(spark, {
-      val cap = Adaptive.minBytes(spark)
+      val cap = Adaptive.MinBytes
       Adaptive.dirBytesAtMost(exportDir, cap) +
         Adaptive.dirBytesAtMost(dest.root, cap)
     }) {
@@ -690,7 +580,7 @@ object Warehouse {
     // tiny-handoff fast path: the delta and both endpoint scans are
     // bounded by the table tree
     Adaptive.withTinyPlan(spark,
-      Adaptive.dirBytesAtMost(tbl.root, Adaptive.minBytes(spark))) {
+      Adaptive.dirBytesAtMost(tbl.root, Adaptive.MinBytes)) {
     val delta = tbl.changesBetween(v1, v2)
     delta.withColumn("shard",
         graft.functions.MarketFunctions.md5Hash60(
@@ -794,7 +684,7 @@ object Warehouse {
     // tiny-handoff fast path: verify + apply scan only the delta dir
     // and the destination tree
     Adaptive.withTinyPlan(spark, {
-      val cap = Adaptive.minBytes(spark)
+      val cap = Adaptive.MinBytes
       Adaptive.dirBytesAtMost(deltaDir, cap) +
         Adaptive.dirBytesAtMost(dest.root, cap)
     }) {
@@ -1194,7 +1084,7 @@ object Warehouse {
     }
     // tiny-verb fast path (guide §2): see [[Adaptive.withTinyPlan]]
     Adaptive.withTinyPlan(spark, {
-      val cap = Adaptive.minBytes(spark)
+      val cap = Adaptive.MinBytes
       Adaptive.dirBytesAtMost(r, cap) + Adaptive.planBytes(ids)
     }) {
     // cells come from the committed (raw) view so the tombstone lands
@@ -1305,7 +1195,7 @@ object Warehouse {
     // by the index tree + the batch — when both are provably small,
     // AQE's per-exchange stage jobs are pure driver overhead
     Adaptive.withTinyPlan(spark, {
-      val cap = Adaptive.minBytes(spark)
+      val cap = Adaptive.MinBytes
       Adaptive.dirBytesAtMost(r, cap) + Adaptive.planBytes(batch)
     }) {
     updateInPqIndexBody(spark, root, r, t, batch, idCol, vecCol, txn,
@@ -1621,7 +1511,7 @@ object Warehouse {
     // simply joins the merge. Bounded so a pathological append storm
     // surfaces instead of spinning.
     Adaptive.withTinyPlan(spark,
-      Adaptive.dirBytesAtMost(root, Adaptive.minBytes(spark))) {
+      Adaptive.dirBytesAtMost(root, Adaptive.MinBytes)) {
     AtomicTable.retryOnConflict(attempts) {
       val emb = pqDeltaEmbTable(spark, root, failpoint)
       val codes = pqDeltaCodeTable(spark, root, failpoint)
@@ -1719,7 +1609,7 @@ object Warehouse {
     // tiny-index fast path: drift report, retrain, and rebuild are
     // all bounded by the index tree
     Adaptive.withTinyPlan(spark,
-      Adaptive.dirBytesAtMost(root, Adaptive.minBytes(spark))) {
+      Adaptive.dirBytesAtMost(root, Adaptive.MinBytes)) {
     // heal a predecessor that crashed between its flip and its sweep
     sweepSupersededIndexDeltas(spark, root, idCol, vecCol)
     if (!hasPqDeltas(spark, root)) return None
@@ -1816,7 +1706,7 @@ object Warehouse {
     // tiny-index fast path (guide §2): the whole rebuild is bounded
     // by the index tree — see [[Adaptive.withTinyPlan]]
     Adaptive.withTinyPlan(spark,
-      Adaptive.dirBytesAtMost(root, Adaptive.minBytes(spark))) {
+      Adaptive.dirBytesAtMost(root, Adaptive.MinBytes)) {
     // heal a predecessor that crashed between its flip and its sweep
     sweepSupersededIndexDeltas(spark, root, idCol, vecCol)
     val cents = readEmbeddingCentroids(root)
@@ -1877,7 +1767,7 @@ object Warehouse {
     // runs per micro-batch in the auto-compact stream: the two counts
     // scan only the narrow codes tables — tiny-index fast path applies
     Adaptive.withTinyPlan(spark,
-      Adaptive.dirBytesAtMost(root, Adaptive.minBytes(spark))) {
+      Adaptive.dirBytesAtMost(root, Adaptive.MinBytes)) {
       val all = readPqCodesAll(spark, root).count()
       if (all == 0L) 0.0
       else 1.0 - readPqCodesLive(spark, root, idCol).count().toDouble / all
@@ -2059,7 +1949,7 @@ object Warehouse {
     // the two trees on disk — when both are provably small, AQE's
     // per-exchange stage jobs dominate the window's wall clock
     Adaptive.withTinyPlan(spark, {
-      val cap = Adaptive.minBytes(spark)
+      val cap = Adaptive.MinBytes
       Adaptive.dirBytesAtMost(r, cap) +
         Adaptive.dirBytesAtMost(src.root, cap)
     }) {
@@ -2377,43 +2267,6 @@ object Warehouse {
       .join(broadcast(topk), idCol)
     graft.pipelines.Similarity
       .voteNeighbors(labeled, "q_id", "q_label", labelCol)
-  }
-
-  /** Partition-pruned delete with the reference's rowcount contract
-    * (/root/reference/app/db.py:204-207): only the named symbols'
-    * directories are read and rewritten; every other partition is
-    * untouched. The touched directories are replaced outright (not
-    * dynamically overwritten) so a fully-deleted symbol ends up with no
-    * directory rather than stale rows.
-    *
-    * NOTE: a crash between the directory delete and the survivor
-    * re-append loses committed rows. For a table-of-record, use
-    * [[PriceTable.deleteWhere]] — fully-old-or-fully-new by manifest
-    * commit.
-    */
-  @deprecated("not crash-atomic; use PriceTable.deleteWhere " +
-    "(fully-old-or-fully-new by manifest commit)", "r6")
-  def deleteWherePrices(spark: SparkSession, root: String,
-                        symbols: Seq[String],
-                        cond: org.apache.spark.sql.Column): Long = {
-    val touched = readPrices(spark, root)
-      .filter(col("symbol").isin(symbols: _*))
-    val matched = coalesce(cond, lit(false))
-    val deleted = touched.filter(matched).count()
-    if (deleted > 0) {
-      val staging =
-        s"$root/.prices_staging_${java.util.UUID.randomUUID().toString.take(8)}"
-      touched.filter(!matched).write.mode(SaveMode.Overwrite).parquet(staging)
-      symbols.foreach { s =>
-        deleteRecursively(new java.io.File(s"$root/prices/symbol=$s"))
-      }
-      val kept = spark.read.parquet(staging)
-      if (!kept.isEmpty)
-        kept.write.mode(SaveMode.Append).partitionBy("symbol")
-          .parquet(s"$root/prices")
-      deleteRecursively(new java.io.File(staging))
-    }
-    deleted
   }
 
   private def deleteRecursively(f: java.io.File): Unit = {

@@ -28,20 +28,10 @@ object TestSpark {
   }
 
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder(4)
       .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      // plan-string rendering is billed on EVERY action (the SQL
-      // listener event; AQE re-posts per stage): "simple" renders the
-      // bare tree instead of formatted per-node detail — observed 18
-      // driver-minutes of tree-regex rendering at sf10 without it
-      .config("spark.sql.ui.explainMode", "simple")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(

@@ -16,155 +16,6 @@ class WarehouseSpec extends AnyFunSuite {
 
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
-  test("symbol-partitioned prices prune to the queried partition") {
-    val root = Files.createTempDirectory("graft_wh").toString
-    val prices = Seq(
-      (1L, "EURUSD", 1.08, ts("2024-01-01 10:00:00")),
-      (2L, "AAPL", 190.0, ts("2024-01-01 10:00:00")),
-      (3L, "EURUSD", 1.09, ts("2024-01-01 11:00:00")))
-      .toDF("id", "symbol", "price", "as_of")
-    Warehouse.writePrices(prices, root)
-    val q = Warehouse.readPrices(spark, root)
-      .filter($"symbol" === "EURUSD")
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"))
-    assert(plan.contains("symbol"), plan)
-    assert(q.count() === 2)
-    // the pruned scan reads only the EURUSD directory
-    val scanned = q.queryExecution.executedPlan.collectLeaves()
-      .head.toString
-    assert(scanned.contains("isnotnull(symbol"))
-  }
-
-  test("insertIgnorePrices: pruned anti-join, appends only fresh rows") {
-    val root = Files.createTempDirectory("graft_wh_ins").toString
-    val t0 = ts("2024-01-01 10:00:00")
-    val seed = Seq(
-      (1L, "EURUSD", 1.08, t0, "src0"),
-      (2L, "AAPL", 190.0, t0, "src0"),
-      (3L, "MSFT", 410.0, t0, "src0"))
-      .toDF("id", "symbol", "price", "as_of", "source")
-    Warehouse.writePrices(seed, root)
-    val batch = Seq(
-      (9L, "EURUSD", 9.99, t0, "src0"),                     // dup key: ignored
-      (4L, "EURUSD", 1.09, ts("2024-01-01 11:00:00"), "src0"), // fresh
-      (5L, "GBPUSD", 1.27, t0, "src0"))                     // fresh partition
-      .toDF("id", "symbol", "price", "as_of", "source")
-
-    // the existing-side scan is partition-pruned to the batch's symbols
-    val pruned = Warehouse.prunedExisting(spark, root, batch)
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"), plan)
-    val scan = pruned.queryExecution.executedPlan.collectLeaves()
-      .head.toString
-    assert(scan.contains("EURUSD") && scan.contains("GBPUSD"), scan)
-
-    val inserted = Warehouse.insertIgnorePrices(spark, root, batch)
-    assert(inserted === 2)
-    val after = Warehouse.readPrices(spark, root)
-    assert(after.count() === 5)
-    // the dup key kept the existing row's price
-    assert(after.filter($"symbol" === "EURUSD" && $"as_of" === t0)
-      .select("price").as[Double].collect().toSeq === Seq(1.08))
-    // idempotent: re-inserting the same batch adds nothing
-    assert(Warehouse.insertIgnorePrices(spark, root, batch) === 0)
-  }
-
-  test("upsertPrices (deprecated compat path) rewrites only touched partitions") {
-    // kept only as the non-atomic compat path; tables-of-record use
-    // PriceTable.upsert (the deprecation points every caller there)
-    val root = Files.createTempDirectory("graft_wh_ups").toString
-    val t0 = ts("2024-01-01 10:00:00")
-    val seed = Seq(
-      (1L, "EURUSD", 1.08, t0, "src0"),
-      (2L, "EURUSD", 1.09, ts("2024-01-01 11:00:00"), "src0"),
-      (3L, "AAPL", 190.0, t0, "src0"))
-      .toDF("id", "symbol", "price", "as_of", "source")
-    Warehouse.writePrices(seed, root)
-    val aaplDir = new java.io.File(s"$root/prices/symbol=AAPL")
-    val before = aaplDir.listFiles().map(f => f.getName -> f.lastModified)
-      .toMap
-
-    val batch = Seq(
-      (4L, "EURUSD", 2.00, t0, "src0"),                       // replaces id=1
-      (5L, "EURUSD", 1.10, ts("2024-01-01 12:00:00"), "src0")) // new row
-      .toDF("id", "symbol", "price", "as_of", "source")
-    Warehouse.upsertPrices(spark, root, batch)
-
-    val after = Warehouse.readPrices(spark, root)
-    assert(after.count() === 4)
-    assert(after.filter($"symbol" === "EURUSD" && $"as_of" === t0)
-      .select("price").as[Double].collect().toSeq === Seq(2.00))
-    // the AAPL partition's files were not rewritten
-    val afterFiles = aaplDir.listFiles()
-      .map(f => f.getName -> f.lastModified).toMap
-    assert(afterFiles === before)
-    // no staging leftovers
-    assert(!new java.io.File(root).listFiles()
-      .exists(_.getName.startsWith(".prices_staging")))
-  }
-
-  test("compactPrices collapses append fragments, preserves rows") {
-    val root = Files.createTempDirectory("graft_wh_cmp").toString
-    val t0 = ts("2024-01-01 10:00:00")
-    Warehouse.writePrices(
-      Seq((0L, "EURUSD", 1.0, t0, "src0"), (1L, "AAPL", 190.0, t0, "src0"))
-        .toDF("id", "symbol", "price", "as_of", "source"), root)
-    // ten single-row appends → ten file fragments in the EURUSD dir
-    (1 to 10).foreach { i =>
-      Warehouse.insertIgnorePrices(spark, root,
-        Seq((100L + i, "EURUSD", 1.0 + i,
-          ts(f"2024-01-01 11:${i}%02d:00"), "src0"))
-          .toDF("id", "symbol", "price", "as_of", "source"))
-    }
-    val dir = new java.io.File(s"$root/prices/symbol=EURUSD")
-    def parquetFiles = dir.listFiles().count(_.getName.endsWith(".parquet"))
-    assert(parquetFiles >= 10)
-    val before = Warehouse.readPrices(spark, root)
-      .orderBy("id").collect().toSeq
-    Warehouse.compactPrices(spark, root, Seq("EURUSD"))
-    assert(parquetFiles <= 4, s"still $parquetFiles files")
-    val after = Warehouse.readPrices(spark, root)
-      .orderBy("id").collect().toSeq
-    assert(after === before)
-    // only the named symbol was rewritten is implied: AAPL keeps one file
-    assert(new java.io.File(s"$root/prices/symbol=AAPL")
-      .listFiles().count(_.getName.endsWith(".parquet")) === 1)
-  }
-
-  test("deleteWherePrices (deprecated compat path) rewrites only named partitions, drops empty ones") {
-    // kept only as the non-atomic compat path; tables-of-record use
-    // PriceTable.deleteWhere (the deprecation points every caller there)
-    val root = Files.createTempDirectory("graft_wh_del").toString
-    val t0 = ts("2024-01-01 10:00:00")
-    val seed = Seq(
-      (1L, "EURUSD", 1.08, t0, "src0"),
-      (2L, "EURUSD", 1.09, ts("2024-01-01 11:00:00"), "src0"),
-      (3L, "GBPUSD", 1.27, t0, "src0"),
-      (4L, "AAPL", 190.0, t0, "src0"))
-      .toDF("id", "symbol", "price", "as_of", "source")
-    Warehouse.writePrices(seed, root)
-    val aaplDir = new java.io.File(s"$root/prices/symbol=AAPL")
-    val before = aaplDir.listFiles().map(f => f.getName -> f.lastModified)
-      .toMap
-
-    // partial delete in EURUSD, full delete of GBPUSD
-    val deleted = Warehouse.deleteWherePrices(spark, root,
-      Seq("EURUSD", "GBPUSD"), $"id" === 1L || $"symbol" === "GBPUSD")
-    assert(deleted === 2)
-    val after = Warehouse.readPrices(spark, root)
-    assert(after.select("id").as[Long].collect().sorted.toSeq ===
-      Seq(2L, 4L))
-    // the fully-deleted symbol's directory is gone, not stale
-    assert(!new java.io.File(s"$root/prices/symbol=GBPUSD").exists())
-    // untouched partition files unchanged
-    assert(aaplDir.listFiles().map(f => f.getName -> f.lastModified)
-      .toMap === before)
-    // zero-match delete is a no-op
-    assert(Warehouse.deleteWherePrices(spark, root, Seq("AAPL"),
-      $"price" > 1e9) === 0)
-  }
-
   test("PriceTable: atomic upsert/delete — crash before commit reads fully-old") {
     val root = Files.createTempDirectory("graft_wh_atomic").toString
     val t0 = ts("2024-01-01 10:00:00")
@@ -323,6 +174,17 @@ class WarehouseSpec extends AnyFunSuite {
     assert(q.queryExecution.executedPlan.toString
       .contains("PartitionFilters"))
     assert(q.count() === 1)
+    // the merge side of a mutation scans only the batch's partitions:
+    // prunedExisting plans PartitionFilters on the batch's symbols
+    val pruned = tbl.prunedExisting(Seq(
+      (5L, "EURUSD", 1.09, t0, "src1"),
+      (6L, "GBPUSD", 1.28, t0, "src1"))
+      .toDF("id", "symbol", "price", "as_of", "source"))
+    val prunedPlan = pruned.queryExecution.executedPlan
+    assert(prunedPlan.toString.contains("PartitionFilters"), prunedPlan)
+    val scans = prunedPlan.collectLeaves().map(_.toString).mkString("\n")
+    assert(scans.contains("EURUSD") && scans.contains("GBPUSD"), scans)
+    assert(pruned.count() === 2)
     // upsert leaves untouched partitions' files byte-identical
     val dataRoot = new java.io.File(s"$root/data")
     def aaplFiles = dataRoot.listFiles().flatMap(d =>
