@@ -132,23 +132,29 @@ object Adaptive {
     * shuffle inside the verb fits a handful of in-memory partitions,
     * so per-stage jobs (AQE) and per-task dispatch (a full session's
     * worth of shuffle tasks per exchange) are pure overhead. The conf
-    * flips are restored in a finally; plans executed inside `f` read
-    * the session conf at execution time, so frames BUILT outside and
-    * run inside are covered too.
+    * flips are undone in a finally (a key the session had not set is
+    * unset again, never pinned to its default); plans executed inside
+    * `f` read the session conf at execution time, so frames BUILT
+    * outside and run inside are covered too.
     */
   def withTinyPlan[A](spark: SparkSession, approxBytes: => Long)(f: => A): A = {
-    val prev = spark.conf.getOption(AqeKey).getOrElse("true")
-    val bytes = if (prev == "false") Long.MaxValue else approxBytes
+    // explicitly set values only (getOption answers a registered key's
+    // default even when it is unset)
+    val prevAqe = spark.conf.getAll.get(AqeKey)
+    val bytes =
+      if (spark.conf.get(AqeKey) == "false") Long.MaxValue else approxBytes
     if (bytes >= MinBytes) f
     else {
-      val prevShuf = spark.conf.getOption(ShufKey).getOrElse("200")
+      val prevShuf = spark.conf.getAll.get(ShufKey)
       val k = math.max(1L, bytes / (32L * 1024 * 1024) + 1)
-        .min(prevShuf.toLong)
+        .min(spark.conf.get(ShufKey).toLong)
       spark.conf.set(AqeKey, "false")
       spark.conf.set(ShufKey, k.toString)
+      def restore(key: String, prev: Option[String]): Unit =
+        prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
       try f finally {
-        spark.conf.set(AqeKey, prev)
-        spark.conf.set(ShufKey, prevShuf)
+        restore(AqeKey, prevAqe)
+        restore(ShufKey, prevShuf)
       }
     }
   }

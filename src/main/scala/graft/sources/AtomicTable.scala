@@ -1,12 +1,13 @@
 package graft.sources
 
-import java.nio.file.{Files, FileSystemException}
+import java.nio.file.{Files, FileSystemException, Path}
 import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.operators.Relational
 
@@ -23,6 +24,18 @@ import graft.operators.Relational
   *  - Data lives in immutable write directories
   *    `root/data/<id>/<partCol>=.../` — never rewritten, never appended
   *    to after their commit.
+  *  - Each non-empty data dir carries a `_schema` sidecar: the dir's
+  *    DATA schema (what the stage wrote, minus `partCol`) as compact
+  *    `StructType` JSON. Reads plan against it instead of running
+  *    Spark's one-job footer inference per dir, so building a read
+  *    costs no Spark job however many commits the table holds.
+  *    `partCol` is left out so Spark still infers its type from the
+  *    directory names while planning, exactly as an inferred read does.
+  *    The sidecar is written after the parquet files and before the
+  *    manifest publish (like `_bloom`), so every committed dir has a
+  *    complete one; Spark's scans skip it (underscore prefix) and
+  *    [[vacuum]] reclaims it with its dir. A dir without one was
+  *    committed before the sidecar existed and is read by inference.
   *  - A manifest file `root/manifest-NNNNNNNNNNNN.txt` maps each data
   *    dir to the partition values readers may take from it (`*` = all),
   *    and records per-stream high-water batch ids (`#txn` lines) for
@@ -96,8 +109,8 @@ final case class AtomicTable(spark: SparkSession, root: String,
                              statsCol: Option[String] = None,
                              bloomCol: Option[String] = None) {
 
-  import AtomicTable.{BloomK, ManifestRe, OpPrefix, Star, StatsPrefix,
-    TxnPrefix, bloomBitsFor, statsCmp}
+  import AtomicTable.{BloomK, ManifestRe, OpPrefix, SchemaFile, Star,
+    StatsPrefix, TxnPrefix, bloomBitsFor, statsCmp}
 
   private def rootFile = new java.io.File(root)
 
@@ -311,8 +324,29 @@ final case class AtomicTable(spark: SparkSession, root: String,
        w.option("maxRecordsPerFile", maxRecordsPerFile)
      else w).parquet(s"$root/$rel")
     val ps = dirParts(rel)
-    if (ps.nonEmpty) writeBloomSidecar(rel)
+    if (ps.nonEmpty) {
+      val resolver = spark.sessionState.conf.resolver
+      val data = StructType(
+        shaped.schema.filterNot(f => resolver(f.name, partCol)))
+      Files.writeString(Path.of(root, rel, SchemaFile), data.json)
+      writeBloomSidecar(rel)
+    }
     (rel, ps)
+  }
+
+  /** One committed (or freshly staged) data dir as a DataFrame. The
+    * `_schema` sidecar supplies the data schema, so planning the read
+    * submits no footer-inference job; the partition column's type is
+    * still inferred from the directory names while planning. A dir
+    * without a sidecar predates it and falls back to inference.
+    */
+  private def readDir(rel: String): DataFrame = {
+    val sidecar = Path.of(root, rel, SchemaFile)
+    val reader =
+      if (!Files.isRegularFile(sidecar)) spark.read
+      else spark.read.schema(DataType.fromJson(
+        Files.readString(sidecar)).asInstanceOf[StructType])
+    reader.parquet(s"$root/$rel")
   }
 
   /** Build the staged dir's `_bloom` sidecar: one batch-sized pass
@@ -323,7 +357,7 @@ final case class AtomicTable(spark: SparkSession, root: String,
     * per key, ~1% FPR), never to the table — commits stay O(batch).
     */
   private def writeBloomSidecar(rel: String): Unit = bloomCol.foreach { c =>
-    val keys = spark.read.parquet(s"$root/$rel")
+    val keys = readDir(rel)
       .select(col(c).cast("string").as("k")).filter(col("k").isNotNull)
     val n = keys.count()
     if (n > 0) {
@@ -371,7 +405,7 @@ final case class AtomicTable(spark: SparkSession, root: String,
     statsCol.toSeq.flatMap { c =>
       if (ps.isEmpty) Nil
       else {
-        val r = spark.read.parquet(s"$root/$rel")
+        val r = readDir(rel)
           .agg(min(col(c)).cast("string"), max(col(c)).cast("string"))
           .collect()(0)
         if (r.isNullAt(0)) Nil
@@ -680,7 +714,7 @@ final case class AtomicTable(spark: SparkSession, root: String,
     */
   private def resolve(entries: Seq[(String, Seq[String])]): DataFrame =
     entries.map { case (d, syms) =>
-      val df = spark.read.parquet(s"$root/$d")
+      val df = readDir(d)
       if (syms == Seq(Star)) df
       else df.filter(col(partCol).isin(syms.map(partType): _*))
     }.reduce(_.unionByName(_, allowMissingColumns = true))
@@ -1006,6 +1040,7 @@ object AtomicTable {
   private val OpPrefix = "#op"
   private val StatsPrefix = "#minmax"
   private val BloomK = 7
+  private val SchemaFile = "_schema"
 
   /** Filter size for an n-key commit: next power of two of ~10 bits
     * per key (k=7 → ~1% FPR), clamped to [2^14, 2^22] — at the cap a

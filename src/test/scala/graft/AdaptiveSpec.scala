@@ -9,9 +9,10 @@ import graft.sources.Adaptive
 
 /** The tiny-plan gate's size walk runs over trees that sweeps, reapers
   * and compactions delete from at the same time: an entry that vanishes
-  * mid-walk must count 0 bytes, never fail the verb that asked.
+  * mid-walk must count 0 bytes, never fail the verb that asked. The
+  * gate's conf flips must leave the shared session as it found them.
   */
-class AdaptiveSpec extends AnyFunSuite {
+class AdaptiveSpec extends AnyFunSuite with StopsStreams {
 
   private def deleteTree(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(deleteTree))
@@ -48,5 +49,29 @@ class AdaptiveSpec extends AnyFunSuite {
       deleteTree(root.toFile)
     }
     assert(churnError.get() === null)
+  }
+
+  test("withTinyPlan: unset confs stay unset, set ones get their value back") {
+    val spark = TestSpark.spark
+    val aqe = "spark.sql.adaptive.enabled"
+    val shuf = "spark.sql.shuffle.partitions"
+    // explicit settings only: getOption would answer a default
+    def set(k: String) = spark.conf.getAll.get(k)
+    val saved = Seq(aqe, shuf).map(k => k -> set(k))
+    try {
+      spark.conf.unset(aqe)
+      spark.conf.unset(shuf)
+      val inside = Adaptive.withTinyPlan(spark, 1024L)(
+        (spark.conf.get(aqe), spark.conf.get(shuf)))
+      assert(inside === (("false", "1")))
+      assert(set(aqe) === None)
+      assert(set(shuf) === None)
+      spark.conf.set(shuf, "3")
+      Adaptive.withTinyPlan(spark, 1024L)(())
+      assert(set(aqe) === None)
+      assert(set(shuf) === Some("3"))
+    } finally saved.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
   }
 }

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * query's `releaseAll` silently dropped another's in-flight self-join
   * persists).
   */
-class CachesSpec extends AnyFunSuite {
+class CachesSpec extends AnyFunSuite with StopsStreams {
   import TestSpark.spark
   import spark.implicits._
 

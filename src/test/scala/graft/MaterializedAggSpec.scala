@@ -52,6 +52,7 @@ class MaterializedAggSpec extends AnyFunSuite {
     val v = mv.table.version
     assert(mv.refresh() === "noop")
     assert(mv.table.version === v)
+    TableProbes.assertReadsAsInferred(mv.table)
   }
 
   test("a reassigning mutation (and a vacuumed fold point) falls back " +

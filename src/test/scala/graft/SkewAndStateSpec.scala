@@ -9,7 +9,7 @@ import graft.streaming.QuoteState
 import graft.streaming.QuoteState.Quote
 
 /** Salted skew join correctness + stateful streaming delta tracking. */
-class SkewAndStateSpec extends AnyFunSuite {
+class SkewAndStateSpec extends AnyFunSuite with StopsStreams {
   import TestSpark.spark
   import spark.implicits._
 

@@ -12,7 +12,7 @@ import graft.streaming.PriceStream
 /** ST1–ST3 streaming semantics (micro-batch dedup-by-key as the late-data
   * policy) and the multimodal partition-local decode plumbing.
   */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with StopsStreams {
   import TestSpark.spark
   import spark.implicits._
 

@@ -196,6 +196,28 @@ class WarehouseSpec extends AnyFunSuite {
       .toDF("id", "symbol", "price", "as_of", "source"))
     assert(aaplFiles === before)
     assert(tbl.version === 3L)
+    TableProbes.assertReadsAsInferred(tbl)
+  }
+
+  test("reads plan from the _schema sidecars: no Spark job before the " +
+    "action, at 1 data dir and at 20") {
+    import graft.sources.AtomicTable
+    val root = Files.createTempDirectory("graft_schema_sidecar").toString
+    val tbl = AtomicTable(spark, s"$root/t", partCol = "part",
+      defaultKeys = Seq("id"))
+    def rows(lo: Int) = (lo until lo + 5)
+      .map(i => (i.toLong, s"p${i % 3}", i * 1.5))
+    def check(dirs: Int): Unit = {
+      assert(tbl.dataDirCount === dirs)
+      val (df, jobs) = TableProbes.jobsDuring(spark)(tbl.read())
+      assert(jobs === 0, s"read() planned with $jobs jobs over $dirs dirs")
+      assert(df.select("id", "part", "x").as[(Long, String, Double)]
+        .collect().sorted.toSeq === (0 until dirs).flatMap(i => rows(5 * i)))
+    }
+    tbl.init(rows(0).toDF("id", "part", "x"))
+    check(1)
+    (1 until 20).foreach(i => tbl.append(rows(5 * i).toDF("id", "part", "x")))
+    check(20)
   }
 
   test("PriceTable: path-escaped symbols (BRK/B) round-trip every mutation") {
@@ -448,6 +470,7 @@ class WarehouseSpec extends AnyFunSuite {
     val out = Files.createTempDirectory("graft_imp_out").toString
     val tbl = graft.sources.DocTable(spark, srcRoot)
     tbl.init(docs.filter($"doc_id" % 3 =!= 0))
+    TableProbes.assertReadsAsInferred(tbl)
     val canon = graft.functions.MarketFunctions.md5Hash60(
       concat(lit("fp#"), $"doc_id".cast("string"), lit("#"),
         $"lang", lit("#"), $"text"))
@@ -1486,6 +1509,10 @@ class WarehouseSpec extends AnyFunSuite {
     tbl.append(rows, txn = Some(("s", 1L)))
     assert(tbl.hasData)
     assert(tbl.read().count() === 2)
+    // an int partition column: its type still comes from the dir names
+    assert(tbl.read().schema("cell").dataType ===
+      org.apache.spark.sql.types.IntegerType)
+    TableProbes.assertReadsAsInferred(tbl)
     // a replay of the empty seed batch stays a no-op
     tbl.init(rows.limit(0), txn = Some(("s", 0L)))
     assert(tbl.read().count() === 2)
@@ -1547,6 +1574,7 @@ class WarehouseSpec extends AnyFunSuite {
     tbl.insertIgnore(Seq((5L, "c", 50)).toDF("id", "part", "x"))
     assert(tbl.read().filter($"id" === 5L).select("score")
       .collect()(0).isNullAt(0))
+    TableProbes.assertReadsAsInferred(tbl)
     // compact folds everything onto the full current schema
     tbl.compact()
     assert(tbl.dataDirCount === 1)
