@@ -5,9 +5,17 @@ import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, Pmod,
+  XxHash64}
+import org.apache.spark.sql.execution.datasources.{FileIndex,
+  HadoopFsRelation, InMemoryFileIndex, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField,
+  StructType}
 
 import graft.operators.Relational
 
@@ -25,17 +33,24 @@ import graft.operators.Relational
   *    `root/data/<id>/<partCol>=.../` — never rewritten, never appended
   *    to after their commit.
   *  - Each non-empty data dir carries a `_schema` sidecar: the dir's
-  *    DATA schema (what the stage wrote, minus `partCol`) as compact
-  *    `StructType` JSON. Reads plan against it instead of running
-  *    Spark's one-job footer inference per dir, so building a read
-  *    costs no Spark job however many commits the table holds.
-  *    `partCol` is left out so Spark still infers its type from the
-  *    directory names while planning, exactly as an inferred read does.
-  *    The sidecar is written after the parquet files and before the
-  *    manifest publish (like `_bloom`), so every committed dir has a
-  *    complete one; Spark's scans skip it (underscore prefix) and
-  *    [[vacuum]] reclaims it with its dir. A dir without one was
-  *    committed before the sidecar existed and is read by inference.
+  *    full WRITTEN schema (the staged frame's, `partCol` included) as
+  *    compact `StructType` JSON. It is written after the parquet files
+  *    and before the manifest publish (like `_bloom`), so every
+  *    committed dir has a complete one; Spark's scans skip it
+  *    (underscore prefix) and [[vacuum]] reclaims it with its dir.
+  *  - A read is ONE parquet scan over a file index built from the
+  *    manifest (one listing per entry, no Spark job): Spark packs the
+  *    files of every dir into ~`defaultParallelism` tasks, and a
+  *    `partCol` predicate still prunes through PartitionFilters. The
+  *    read's schema is the sidecars folded in manifest order, and the
+  *    partition column takes its written type (a string partition of
+  *    `0700` stays the string `0700`).
+  *  - Fallback: when a dir the read needs lacks a full sidecar
+  *    (committed before sidecars, or before they recorded `partCol`)
+  *    or two dirs record different types for one column, the read is
+  *    the union of one scan per dir, the partition type inferred from
+  *    the directory names. [[compact]] moves such a table onto the
+  *    one-scan path.
   *  - A manifest file `root/manifest-NNNNNNNNNNNN.txt` maps each data
   *    dir to the partition values readers may take from it (`*` = all),
   *    and records per-stream high-water batch ids (`#txn` lines) for
@@ -62,15 +77,16 @@ import graft.operators.Relational
   *
   * Contracts: single writer per version (OCC turns a race into a clean
   * [[java.util.ConcurrentModificationException]]); partition values
-  * must not contain tab, comma, or newline (escape at ingest). Scan
-  * pruning is preserved: every read applies `partCol IN (...)` per data
-  * dir, which Catalyst turns into PartitionFilters.
+  * must not contain tab, comma, or newline (escape at ingest). A
+  * narrowed entry (partitions reassigned away by upsert/delete/
+  * overwrite/compact) lists only its assigned partition dirs.
   *
   * `partType` converts the manifest's STRING partition values back to
-  * the column's runtime type for those filters (identity for string
-  * partitions; `_.toInt` for e.g. an IVF `cell` column) — without it a
-  * non-string partition column would compare against string literals
-  * and lose partition pruning.
+  * the column's runtime type for the fallback union's per-dir
+  * `partCol IN (...)` filters (identity for string partitions;
+  * `_.toInt` for e.g. an IVF `cell` column) — without it a non-string
+  * partition column would compare against string literals and lose
+  * partition pruning.
   *
   * `statsCol` opts a column into ZONE-MAP data skipping: each commit
   * records the staged dir's min/max of that column as a `#minmax`
@@ -109,8 +125,9 @@ final case class AtomicTable(spark: SparkSession, root: String,
                              statsCol: Option[String] = None,
                              bloomCol: Option[String] = None) {
 
-  import AtomicTable.{BloomK, ManifestRe, OpPrefix, SchemaFile, Star,
-    StatsPrefix, TxnPrefix, bloomBitsFor, statsCmp}
+  import AtomicTable.{BloomK, ManifestIndex, ManifestRe, OpPrefix,
+    SchemaFile, Star, StatsPrefix, TxnPrefix, bloomBitsFor, nullable,
+    statsCmp}
 
   private def rootFile = new java.io.File(root)
 
@@ -126,8 +143,8 @@ final case class AtomicTable(spark: SparkSession, root: String,
   /** Committed version number (0 = uninitialized). */
   def version: Long = currentManifest.map(_._1).getOrElse(0L)
 
-  /** Data dirs the current manifest references — the per-read union
-    * fan-in [[compact]] bounds.
+  /** Data dirs the current manifest references — the listings a read
+    * makes and the file count [[compact]] bounds.
     */
   def dataDirCount: Int = readManifest().size
 
@@ -307,12 +324,18 @@ final case class AtomicTable(spark: SparkSession, root: String,
     * raw column values the manifest and the `partCol IN (...)` filters
     * speak — otherwise escaped values silently vanish from reads.
     */
-  private def dirParts(rel: String): Seq[String] =
+  private def dirParts(rel: String): Seq[String] = partDirs(rel).map(_._1)
+
+  /** (raw partition value, directory name) of each `partCol=` dir. */
+  private def partDirs(rel: String): Seq[(String, String)] =
     Option(new java.io.File(s"$root/$rel").listFiles())
       .getOrElse(Array.empty[java.io.File])
       .filter(f => f.isDirectory && f.getName.startsWith(s"$partCol="))
-      .map(f => org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .unescapePathName(f.getName.stripPrefix(s"$partCol="))).toSeq
+      .map(f => ExternalCatalogUtils.unescapePathName(
+        f.getName.stripPrefix(s"$partCol=")) -> f.getName).toSeq
+
+  private def isPart(f: StructField): Boolean =
+    spark.sessionState.conf.resolver(f.name, partCol)
 
   /** Stage rows into a fresh immutable dir; returns (relDir, parts). */
   private def stage(rows: DataFrame, coalesceTo: Int = 0,
@@ -325,29 +348,30 @@ final case class AtomicTable(spark: SparkSession, root: String,
      else w).parquet(s"$root/$rel")
     val ps = dirParts(rel)
     if (ps.nonEmpty) {
-      val resolver = spark.sessionState.conf.resolver
-      val data = StructType(
-        shaped.schema.filterNot(f => resolver(f.name, partCol)))
-      Files.writeString(Path.of(root, rel, SchemaFile), data.json)
+      Files.writeString(Path.of(root, rel, SchemaFile), shaped.schema.json)
       writeBloomSidecar(rel)
     }
     (rel, ps)
   }
 
-  /** One committed (or freshly staged) data dir as a DataFrame. The
-    * `_schema` sidecar supplies the data schema, so planning the read
-    * submits no footer-inference job; the partition column's type is
-    * still inferred from the directory names while planning. A dir
-    * without a sidecar predates it and falls back to inference.
-    */
-  private def readDir(rel: String): DataFrame = {
+  /** The schema a dir's `_schema` sidecar records, if it has one. */
+  private def recorded(rel: String): Option[StructType] = {
     val sidecar = Path.of(root, rel, SchemaFile)
-    val reader =
-      if (!Files.isRegularFile(sidecar)) spark.read
-      else spark.read.schema(DataType.fromJson(
-        Files.readString(sidecar)).asInstanceOf[StructType])
-    reader.parquet(s"$root/$rel")
+    if (!Files.isRegularFile(sidecar)) None
+    else Some(DataType.fromJson(Files.readString(sidecar))
+      .asInstanceOf[StructType])
   }
+
+  /** One data dir as a DataFrame, for the fallback union: the sidecar
+    * (if any) supplies the data columns, so planning submits no
+    * footer-inference job, and the partition column's type is
+    * inferred from the directory names. A dir without a sidecar
+    * predates it and is read by inference.
+    */
+  private def readDir(rel: String): DataFrame =
+    recorded(rel).fold(spark.read)(s =>
+      spark.read.schema(StructType(s.filterNot(isPart))))
+      .parquet(s"$root/$rel")
 
   /** Build the staged dir's `_bloom` sidecar: one batch-sized pass
     * hashes [[bloomCol]] (as string) to [[BloomK]] positions through
@@ -357,7 +381,7 @@ final case class AtomicTable(spark: SparkSession, root: String,
     * per key, ~1% FPR), never to the table — commits stay O(batch).
     */
   private def writeBloomSidecar(rel: String): Unit = bloomCol.foreach { c =>
-    val keys = readDir(rel)
+    val keys = resolve(Seq(rel -> Seq(Star)))
       .select(col(c).cast("string").as("k")).filter(col("k").isNotNull)
     val n = keys.count()
     if (n > 0) {
@@ -405,7 +429,7 @@ final case class AtomicTable(spark: SparkSession, root: String,
     statsCol.toSeq.flatMap { c =>
       if (ps.isEmpty) Nil
       else {
-        val r = readDir(rel)
+        val r = resolve(Seq(rel -> Seq(Star)))
           .agg(min(col(c)).cast("string"), max(col(c)).cast("string"))
           .collect()(0)
         if (r.isNullAt(0)) Nil
@@ -565,28 +589,20 @@ final case class AtomicTable(spark: SparkSession, root: String,
   /** The manifest entries a point probe for `key` must read — package-
     * visible so the spec can assert the skip on the resolved dir list.
     * Probe positions come from the SAME `xxhash64` expression the
-    * sidecar build used (evaluated on a one-row frame, one tiny job
-    * per distinct filter size), so build and probe cannot drift.
+    * sidecar build used, evaluated on the driver (no Spark job), so
+    * build and probe cannot drift.
     */
   private[graft] def bloomSurvivors(key: Any): Seq[(String, Seq[String])] = {
     val c = bloomCol.getOrElse(sys.error(
       s"bloom probe requires a bloomCol on the table at $root"))
-    val entries = readManifest()
-    val sides = entries.flatMap { case (d, _) =>
-      readBloomSidecar(d).collect { case (`c`, m, k, bits) => d -> ((m, k, bits)) }
-    }.toMap
-    val posFor = sides.values.map { case (m, k, _) => (m, k) }.toSet
-      .map { mk: (Long, Int) =>
-        val (m, k) = mk
-        val r = spark.range(1).select((0 until k).map(i =>
-          pmod(xxhash64(lit(i), lit(key.toString)), lit(m)).as(s"p$i")): _*)
-          .head()
-        mk -> (0 until k).map(r.getLong)
-      }.toMap
-    entries.filter { case (d, _) =>
-      sides.get(d).forall { case (m, k, bits) =>
-        posFor((m, k)).forall(p =>
-          ((bits((p / 64).toInt) >>> (p % 64).toInt) & 1L) == 1L)
+    readManifest().filter { case (d, _) =>
+      readBloomSidecar(d).forall {
+        case (`c`, m, k, bits) => (0 until k).forall { i =>
+          val p = Pmod(new XxHash64(Seq(Literal(i), Literal(key.toString))),
+            Literal(m)).eval().asInstanceOf[Long]
+          ((bits((p / 64).toInt) >>> (p % 64).toInt) & 1L) == 1L
+        }
+        case _ => true // a filter over another column never skips
       }
     }
   }
@@ -701,23 +717,72 @@ final case class AtomicTable(spark: SparkSession, root: String,
     if (fresh.isEmpty) None else Some(resolve(fresh))
   }
 
-  /** Schema EVOLUTION at the read seam: dirs staged before a column
-    * existed union null-filled against dirs that carry it, so adding a
-    * column (a new quality score, a provenance tag) never rewrites
-    * committed data — exactly the add-column semantics of the table
-    * formats this manifest mirrors. Column ORDER is manifest order
-    * (oldest dir's columns first, later additions appended);
-    * [[compact]] folds everything onto the full current schema. Only
-    * ADDITIVE evolution is supported: a column that changes TYPE
-    * between dirs fails the union analysis loudly rather than
-    * coercing silently.
+  /** The entries as ONE parquet scan over a [[ManifestIndex]], or —
+    * when a dir lacks a full sidecar or two dirs record different types
+    * for one column — as the union of one scan per dir.
+    *
+    * Schema EVOLUTION at the read seam: dirs staged before a column
+    * existed read it as null, so adding a column (a new quality score,
+    * a provenance tag) never rewrites committed data — exactly the
+    * add-column semantics of the table formats this manifest mirrors.
+    * Column ORDER is manifest order (oldest dir's columns first with
+    * `partCol` after them, later additions appended), the order both
+    * paths produce; [[compact]] folds everything onto the full current
+    * schema. Only ADDITIVE evolution is read as one scan; a column
+    * whose type differs between dirs goes to the union, which widens
+    * it or fails the analysis loudly.
     */
   private def resolve(entries: Seq[(String, Seq[String])]): DataFrame =
-    entries.map { case (d, syms) =>
-      val df = readDir(d)
-      if (syms == Seq(Star)) df
-      else df.filter(col(partCol).isin(syms.map(partType): _*))
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
+    oneScanSchema(entries) match {
+      case Some(schema) =>
+        val part = StructType(schema.filter(isPart))
+        val dirs = entries.flatMap { case (d, syms) =>
+          val base = new HPath(s"$root/$d")
+          val leaves = partDirs(d)
+          val roots =
+            if (syms == Seq(Star) || leaves.forall(l => syms.contains(l._1)))
+              Seq(base) // a whole entry lists its dir
+            else leaves.collect { case (v, name) if syms.contains(v) =>
+              new HPath(base, name) }
+          roots.map(r => new InMemoryFileIndex(spark, Seq(r),
+            Map("basePath" -> base.toString), Some(part)))
+        }
+        spark.baseRelationToDataFrame(HadoopFsRelation(
+          ManifestIndex(dirs, part), part, schema, None,
+          new ParquetFileFormat, Map.empty)(spark))
+      case None =>
+        entries.map { case (d, syms) =>
+          val df = readDir(d)
+          if (syms == Seq(Star)) df
+          else df.filter(col(partCol).isin(syms.map(partType): _*))
+        }.reduce(_.unionByName(_, allowMissingColumns = true))
+    }
+
+  /** The one-scan read's schema: every dir's recorded schema with
+    * `partCol` moved after its data columns, folded in manifest order
+    * and made nullable as a parquet read is. None when a dir has no
+    * sidecar, or one without `partCol`, or when two dirs record
+    * different types for one column.
+    */
+  private def oneScanSchema(
+      entries: Seq[(String, Seq[String])]): Option[StructType] = {
+    val dirs = entries.map { case (d, _) =>
+      recorded(d).filter(_.exists(isPart))
+    }
+    if (dirs.exists(_.isEmpty)) None
+    else {
+      val resolver = spark.sessionState.conf.resolver
+      val fields = dirs.flatten
+        .flatMap(s => s.filterNot(isPart) ++ s.filter(isPart))
+        .map(f => f.copy(dataType = nullable(f.dataType), nullable = true))
+      val merged = fields.foldLeft(Vector.empty[StructField]) { (acc, f) =>
+        if (acc.exists(g => resolver(g.name, f.name))) acc else acc :+ f
+      }
+      val agree = fields.forall(f => merged.exists(g =>
+        resolver(g.name, f.name) && g.dataType == f.dataType))
+      if (agree) Some(StructType(merged)) else None
+    }
+  }
 
   /** Align an (evolved) writer batch against the committed schema:
     * committed columns keep their position — a column the batch does
@@ -1088,6 +1153,39 @@ object AtomicTable {
       }
     }
     throw new IllegalStateException("unreachable")
+  }
+
+  /** `t` with every nested field, element and value nullable — the
+    * schema a parquet read reports whatever the writer declared.
+    */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType =>
+      ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType =>
+      MapType(nullable(m.keyType), nullable(m.valueType),
+        valueContainsNull = true)
+    case other => other
+  }
+
+  /** A table read's file index: one single-root [[InMemoryFileIndex]]
+    * per data dir (or per assigned partition dir of a narrowed entry),
+    * each listed serially on the driver, their files concatenated into
+    * one scan. A case class so two reads of the same manifest compare
+    * equal, as the cache manager's plan matching needs.
+    */
+  private final case class ManifestIndex(dirs: Seq[InMemoryFileIndex],
+                                         partitionSchema: StructType)
+      extends FileIndex {
+    def rootPaths: Seq[HPath] = dirs.flatMap(_.rootPaths)
+    def listFiles(partitionFilters: Seq[Expression],
+                  dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      dirs.flatMap(_.listFiles(partitionFilters, dataFilters))
+    def inputFiles: Array[String] = dirs.flatMap(_.inputFiles).toArray
+    def refresh(): Unit = dirs.foreach(_.refresh())
+    def sizeInBytes: Long = dirs.map(_.sizeInBytes).sum
   }
 
   private def deleteRecursively(f: java.io.File): Unit = {

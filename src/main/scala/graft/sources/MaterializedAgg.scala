@@ -40,8 +40,9 @@ import org.apache.spark.sql.functions._
   *
   * Partial commits accrete one dir per refresh; past a fan-in bound
   * the refresh folds them through the view table's own [[AtomicTable
-  * .compact]] — the view stays O(group cardinality) on disk while the
-  * serve plan stays a bounded union. At 100 TB the steady state is:
+  * .compact]] — the view stays O(group cardinality) on disk and the
+  * serve plan is one scan over a bounded file count. At 100 TB the
+  * steady state is:
   * each ingest micro-batch appends to the base, `refresh()` shuffles
   * only that batch's rows on `dims`, and the dashboard reads a
   * group-cardinality-sized table instead of the corpus.

@@ -8,7 +8,8 @@ import java.util.concurrent.TimeUnit
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.scalatest.Assertions._
 
 import graft.sources.AtomicTable
@@ -56,6 +57,10 @@ object TableProbes {
     }
   }
 
+  /** The parquet scans `df` plans (before adaptive execution). */
+  def scans(df: DataFrame): Seq[FileSourceScanExec] =
+    df.queryExecution.sparkPlan.collect { case s: FileSourceScanExec => s }
+
   /** Assert `tbl` reads exactly as it would by footer inference: same
     * schema (column order, types, nullability) and same rows as a copy
     * of the table with every `_schema` sidecar deleted — which is also
@@ -84,7 +89,7 @@ object TableProbes {
     val recorded = tbl.read()
     val inferred = tbl.copy(root = copy.toString).read()
     assert(recorded.schema === inferred.schema)
-    def rows(df: org.apache.spark.sql.DataFrame) =
+    def rows(df: DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
     assert(rows(recorded) === rows(inferred))
   }

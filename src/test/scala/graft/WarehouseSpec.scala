@@ -51,6 +51,8 @@ class WarehouseSpec extends AnyFunSuite {
     tbl.upsert(batch)
     val afterUpsert = tbl.read()
     assert(afterUpsert.count() === 4)
+    // the upsert narrowed the seed dir to its untouched symbols
+    TableProbes.assertReadsAsInferred(tbl)
     assert(afterUpsert.filter($"symbol" === "EURUSD" && $"as_of" === t0)
       .select("price").as[Double].collect().toSeq === Seq(2.00))
     assert(tbl.deleteWhere(Seq("GBPUSD"), $"symbol" === "GBPUSD") === 1)
@@ -207,17 +209,60 @@ class WarehouseSpec extends AnyFunSuite {
       defaultKeys = Seq("id"))
     def rows(lo: Int) = (lo until lo + 5)
       .map(i => (i.toLong, s"p${i % 3}", i * 1.5))
-    def check(dirs: Int): Unit = {
-      assert(tbl.dataDirCount === dirs)
+    def check(dirs: Int, want: Seq[(Long, String, Double)]) = {
       val (df, jobs) = TableProbes.jobsDuring(spark)(tbl.read())
       assert(jobs === 0, s"read() planned with $jobs jobs over $dirs dirs")
+      // one parquet scan whatever the dir count, its files packed into
+      // about defaultParallelism tasks rather than one task per file
+      assert(TableProbes.scans(df).size === 1)
+      val parallelism = spark.sparkContext.defaultParallelism
+      assert(df.rdd.getNumPartitions <= 2 * parallelism,
+        s"${df.rdd.getNumPartitions} partitions over $dirs dirs")
       assert(df.select("id", "part", "x").as[(Long, String, Double)]
-        .collect().sorted.toSeq === (0 until dirs).flatMap(i => rows(5 * i)))
+        .collect().sorted.toSeq === want.sorted)
+      df
     }
+    def all(dirs: Int) = (0 until dirs).flatMap(i => rows(5 * i))
     tbl.init(rows(0).toDF("id", "part", "x"))
-    check(1)
+    assert(tbl.dataDirCount === 1)
+    check(1, all(1))
     (1 until 20).foreach(i => tbl.append(rows(5 * i).toDF("id", "part", "x")))
-    check(20)
+    assert(tbl.dataDirCount === 20)
+    check(20, all(20))
+    // an upsert narrows all 20 entries to p1/p2: still one scan, and a
+    // partCol predicate still prunes partitions
+    tbl.upsert(Seq((0L, "p0", -1.0)).toDF("id", "part", "x"))
+    val upserted = all(20).map {
+      case (0L, p, _) => (0L, p, -1.0)
+      case r          => r
+    }
+    val df = check(21, upserted)
+    val p1 = df.filter($"part" === "p1")
+    val scan = TableProbes.scans(p1)
+    assert(scan.size === 1 && scan.head.partitionFilters.nonEmpty,
+      p1.queryExecution.executedPlan)
+    assert(p1.select("id", "part", "x").as[(Long, String, Double)]
+      .collect().sorted.toSeq === upserted.filter(_._2 == "p1").sorted)
+  }
+
+  test("PriceTable: numeric-looking symbols keep their written string " +
+    "type; a later non-numeric symbol still commits") {
+    val root = Files.createTempDirectory("graft_wh_numsym").toString
+    val t0 = ts("2024-01-01 10:00:00")
+    val tbl = graft.sources.PriceTable(spark, root)
+    tbl.init(Seq(
+      (1L, "0700", 320.0, t0, "src0"),
+      (2L, "7203", 2500.0, t0, "src0"))
+      .toDF("id", "symbol", "price", "as_of", "source"))
+    assert(tbl.read().schema("symbol").dataType ===
+      org.apache.spark.sql.types.StringType)
+    assert(tbl.read().select("symbol").as[String].collect().sorted.toSeq ===
+      Seq("0700", "7203"))
+    assert(tbl.insertIgnore(Seq((3L, "AAPL", 190.0, t0, "src0"))
+      .toDF("id", "symbol", "price", "as_of", "source")) === 1)
+    assert(tbl.read().select("id", "symbol").as[(Long, String)]
+      .collect().sorted.toSeq ===
+      Seq((1L, "0700"), (2L, "7203"), (3L, "AAPL")))
   }
 
   test("PriceTable: path-escaped symbols (BRK/B) round-trip every mutation") {
@@ -1575,11 +1620,43 @@ class WarehouseSpec extends AnyFunSuite {
     assert(tbl.read().filter($"id" === 5L).select("score")
       .collect()(0).isNullAt(0))
     TableProbes.assertReadsAsInferred(tbl)
+    // the evolved read is one scan, the appended column after partCol
+    assert(TableProbes.scans(tbl.read()).size === 1)
+    assert(tbl.read().columns.toSeq === Seq("id", "x", "part", "score"))
     // compact folds everything onto the full current schema
     tbl.compact()
     assert(tbl.dataDirCount === 1)
     assert(tbl.read().columns.toSet === Set("id", "x", "part", "score"))
     assert(tbl.read().count() === 5)
+
+    // a column recorded as int in one dir and bigint in the next is not
+    // additive: the read falls back to the per-dir union, which widens
+    // it to bigint
+    val widened = AtomicTable(spark, s"$root/w", partCol = "part",
+      defaultKeys = Seq("id"))
+    widened.init(Seq((1L, "a", 10)).toDF("id", "part", "x"))
+    widened.append(Seq((2L, "a", 20L)).toDF("id", "part", "x"))
+    val w = widened.read()
+    assert(TableProbes.scans(w).size === 2, "per-dir union")
+    assert(w.schema("x").dataType === org.apache.spark.sql.types.LongType)
+    assert(w.select("id", "x").as[(Long, Long)].collect().sorted.toSeq ===
+      Seq((1L, 10L), (2L, 20L)))
+    // a sidecar that records only the data columns (no partCol) also
+    // sends the read to the union; compact moves it onto one scan
+    val legacy = AtomicTable(spark, s"$root/l", partCol = "part",
+      defaultKeys = Seq("id"))
+    legacy.init(Seq((1L, "a", 10)).toDF("id", "part", "x"))
+    val Array(legacyDir) = new java.io.File(s"$root/l/data").listFiles()
+    Files.writeString(legacyDir.toPath.resolve("_schema"),
+      Seq((1L, 10)).toDF("id", "x").schema.json)
+    legacy.append(Seq((2L, "b", 20)).toDF("id", "part", "x"))
+    def legacyRows = legacy.read().select("id", "part", "x")
+      .as[(Long, String, Int)].collect().sorted.toSeq
+    assert(TableProbes.scans(legacy.read()).size === 2, "per-dir union")
+    assert(legacyRows === Seq((1L, "a", 10), (2L, "b", 20)))
+    legacy.compact()
+    assert(TableProbes.scans(legacy.read()).size === 1)
+    assert(legacyRows === Seq((1L, "a", 10), (2L, "b", 20)))
   }
 
   test("zone-map stats skip non-intersecting commits; pruning never " +
@@ -1678,6 +1755,26 @@ class WarehouseSpec extends AnyFunSuite {
       defaultKeys = Seq("id"), bloomCol = Some("x"))
     assert(otherCol.bloomSurvivors(10L).size === 2,
       "column-mismatched sidecar never skips")
+  }
+
+  test("readPoint plans with no Spark job: bloom probe positions are " +
+    "evaluated on the driver") {
+    import graft.sources.AtomicTable
+    val root = Files.createTempDirectory("graft_bloom_nojob").toString
+    val tbl = AtomicTable(spark, s"$root/t", partCol = "part",
+      defaultKeys = Seq("id"), bloomCol = Some("id"))
+    def batch(lo: Long, hi: Long) = (lo to hi)
+      .map(i => (i, if (i % 2 == 0) "a" else "b", i * 10))
+      .toDF("id", "part", "x")
+    tbl.init(batch(1, 100))
+    tbl.append(batch(101, 200))
+    val (hit, hitJobs) = TableProbes.jobsDuring(spark)(tbl.readPoint(150L))
+    assert(hitJobs === 0)
+    assert(hit.select("x").as[Long].collect().toSeq === Seq(1500L))
+    val (miss, missJobs) =
+      TableProbes.jobsDuring(spark)(tbl.readPoint(99999L))
+    assert(missJobs === 0)
+    assert(miss.count() === 0)
   }
 
   test("skipping reads push the residual predicate into the surviving " +
