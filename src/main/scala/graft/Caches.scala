@@ -13,6 +13,8 @@ final class CacheScope {
     new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
   private val memo =
     new java.util.concurrent.ConcurrentHashMap[Any, DataFrame]()
+  private val slots =
+    new java.util.concurrent.ConcurrentHashMap[Any, (Any, DataFrame)]()
 
   /** Persist `df` and register it for release with this scope. */
   def persist(df: DataFrame): DataFrame = {
@@ -30,11 +32,29 @@ final class CacheScope {
   def getOrPersist(key: Any, build: => DataFrame): DataFrame =
     memo.computeIfAbsent(key, _ => persist(build))
 
+  /** The versioned flavor: at most one persisted frame per `slot`.
+    * The frame built at `version` is reused while the version holds;
+    * a new version unpersists the superseded frame before building
+    * its successor, so a long-lived scope never accumulates one frame
+    * per version. Cleared on [[release]] with everything else.
+    */
+  def persistSlot(slot: Any, version: Any, build: => DataFrame): DataFrame =
+    slots.compute(slot, (_, held) =>
+      if (held != null && held._1 == version) held
+      else {
+        if (held != null) {
+          active.remove(held._2)
+          held._2.unpersist(blocking = false)
+        }
+        (version, persist(build))
+      })._2
+
   /** Unpersist every registered intermediate (non-blocking: block frees
     * proceed asynchronously while the next query starts).
     */
   def release(): Unit = {
     memo.clear()
+    slots.clear()
     var d = active.poll()
     while (d != null) {
       try d.unpersist(blocking = false)
@@ -99,6 +119,12 @@ object Caches {
     */
   def getOrPersist(key: Any, build: => DataFrame): DataFrame =
     current.value.getOrPersist(key, build)
+
+  /** Versioned persist against the current scope — see
+    * [[CacheScope.persistSlot]].
+    */
+  def persistSlot(slot: Any, version: Any, build: => DataFrame): DataFrame =
+    current.value.persistSlot(slot, version, build)
 
   /** Release the GLOBAL scope's intermediates — the harness hook
     * (Verify / Bench call this after each query's terminal action).

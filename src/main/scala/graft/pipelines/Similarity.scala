@@ -800,15 +800,15 @@ object Similarity {
     * exact, each code dereferences its centroid — score = Σ over
     * subspaces of ⟨query_sub, codebook[j][code_j]⟩, an inner-product
     * estimate of cosine for normalized inputs. Pure lookup arithmetic
-    * over literal codebook arrays: the scan reads m-byte codes, never
-    * raw vectors.
+    * over literal codebook arrays (one literal per codebook, not one
+    * per coordinate, so planning stays cheap): the scan reads m-byte
+    * codes, never raw vectors.
     */
   def pqScore(qN: Column, codes: Column,
               cb: Array[Array[Array[Double]]]): Column =
     cb.indices.map { j =>
       val subDim = cb(j)(0).length
-      val cbCol = array(cb(j).map(cent => array(cent.map(lit): _*)): _*)
-      val cent = element_at(cbCol, element_at(codes, j + 1) + 1)
+      val cent = element_at(typedLit(cb(j)), element_at(codes, j + 1) + 1)
       aggregate(zip_with(slice(qN, j * subDim + 1, subDim), cent,
         (x, w) => x * w), lit(0.0), (acc, x) => acc + x)
     }.reduce(_ + _)
@@ -867,11 +867,9 @@ object Similarity {
     * ⟨q, y⟩ ≈ ⟨q, cn(cell)⟩ + ⟨q, residual-decode⟩.
     */
   def centroidDot(qN: Column, cell: Column,
-                  centsN: Array[Array[Double]]): Column = {
-    val cm = array(centsN.map(c => array(c.map(lit): _*)): _*)
-    aggregate(zip_with(qN, element_at(cm, cell + 1), (x, w) => x * w),
-      lit(0.0), (acc, x) => acc + x)
-  }
+                  centsN: Array[Array[Double]]): Column =
+    aggregate(zip_with(qN, element_at(typedLit(centsN), cell + 1),
+      (x, w) => x * w), lit(0.0), (acc, x) => acc + x)
 
   /** Per-subspace Lloyd refinement on RESIDUAL subvectors — the
     * codebooks residual ADC dereferences must be trained on the

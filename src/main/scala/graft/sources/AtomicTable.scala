@@ -125,9 +125,9 @@ final case class AtomicTable(spark: SparkSession, root: String,
                              statsCol: Option[String] = None,
                              bloomCol: Option[String] = None) {
 
-  import AtomicTable.{BloomK, ManifestIndex, ManifestRe, OpPrefix,
-    SchemaFile, Star, StatsPrefix, TxnPrefix, bloomBitsFor, nullable,
-    statsCmp}
+  import AtomicTable.{BloomK, ManifestIndex, ManifestRe, OpPrefix, Star,
+    StatsPrefix, TxnPrefix, bloomBitsFor, nullable, recordSchema,
+    recordedSchema, statsCmp}
 
   private def rootFile = new java.io.File(root)
 
@@ -348,19 +348,15 @@ final case class AtomicTable(spark: SparkSession, root: String,
      else w).parquet(s"$root/$rel")
     val ps = dirParts(rel)
     if (ps.nonEmpty) {
-      Files.writeString(Path.of(root, rel, SchemaFile), shaped.schema.json)
+      recordSchema(s"$root/$rel", shaped.schema)
       writeBloomSidecar(rel)
     }
     (rel, ps)
   }
 
   /** The schema a dir's `_schema` sidecar records, if it has one. */
-  private def recorded(rel: String): Option[StructType] = {
-    val sidecar = Path.of(root, rel, SchemaFile)
-    if (!Files.isRegularFile(sidecar)) None
-    else Some(DataType.fromJson(Files.readString(sidecar))
-      .asInstanceOf[StructType])
-  }
+  private def recorded(rel: String): Option[StructType] =
+    recordedSchema(s"$root/$rel")
 
   /** One data dir as a DataFrame, for the fallback union: the sidecar
     * (if any) supplies the data columns, so planning submits no
@@ -1154,6 +1150,35 @@ object AtomicTable {
     }
     throw new IllegalStateException("unreachable")
   }
+
+  /** Record `schema`, the full written schema, as the `_schema`
+    * sidecar of the parquet tree at `dir`: a table's staged data dirs
+    * and the IVFPQ index base trees.
+    */
+  private[sources] def recordSchema(dir: String, schema: StructType): Unit =
+    Files.writeString(Path.of(dir, SchemaFile), schema.json)
+
+  /** The schema `dir`'s `_schema` sidecar records, if it has one. */
+  private def recordedSchema(dir: String): Option[StructType] = {
+    val sidecar = Path.of(dir, SchemaFile)
+    if (!Files.isRegularFile(sidecar)) None
+    else Some(DataType.fromJson(Files.readString(sidecar))
+      .asInstanceOf[StructType])
+  }
+
+  /** The `partitionBy(partCol)` parquet tree at `dir`, read through its
+    * `_schema` sidecar: data columns then `partCol`, nullable as a
+    * parquet read is, so planning submits no footer-inference job. A
+    * tree without a sidecar (written before it existed) is read by
+    * inference.
+    */
+  private[sources] def readRecorded(spark: SparkSession, dir: String,
+                                    partCol: String): DataFrame =
+    recordedSchema(dir).fold(spark.read) { s =>
+      val (part, data) = s.fields.partition(_.name == partCol)
+      spark.read.schema(StructType((data ++ part).map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true))))
+    }.parquet(dir)
 
   /** `t` with every nested field, element and value nullable — the
     * schema a parquet read reports whatever the writer declared.

@@ -7,6 +7,7 @@ import java.util.concurrent.TimeUnit
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -15,8 +16,9 @@ import org.scalatest.Assertions._
 import graft.sources.AtomicTable
 
 /** Probes for the table format's read path: how many Spark jobs a
-  * piece of code submits, and whether a table reads the same
-  * through its `_schema` sidecars as through footer inference.
+  * piece of code submits, how many classes Spark compiles for it, and
+  * whether a table reads the same through its `_schema` sidecars as
+  * through footer inference.
   */
 object TableProbes {
 
@@ -55,6 +57,16 @@ object TableProbes {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  /** Run `body` and count the classes Spark's code generator compiled
+    * meanwhile (a hit in its compiled-class cache counts none). The
+    * counter is JVM-wide: nothing else may plan concurrently.
+    */
+  def compilesDuring[A](body: => A): (A, Long) = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val out = body
+    (out, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before)
   }
 
   /** The parquet scans `df` plans (before adaptive execution). */

@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -1403,6 +1406,203 @@ class WarehouseSpec extends AnyFunSuite {
       "in-flight serve must be unaffected by a concurrent compaction")
     assert(serve(root) === expected, "compaction must not change answers")
     assert(Warehouse.pqDeltaCodeTable(spark, root).dataDirCount === 1)
+  }
+
+  // ---- the serving state of ivfPqServe --------------------------------
+
+  test("index base records its _schema: the index reads plan with no " +
+    "Spark job and read as footer inference does") {
+    import graft.pipelines.Similarity
+    val emb = Tables(spark, "/root/testdata/sf0.001").embeddings
+    val root = Files.createTempDirectory("graft_pq_schema").toString
+    Warehouse.writePqIndex(emb, root, k = 8, dim = 64, m = 8, ks = 16,
+      centroids = Some(Similarity.seedCentroids(8, 64)),
+      codebooks = Some(Similarity.pqSeedCodebooks(8, 16, 8)))
+    Warehouse.writePqDelta(emb.filter($"vec_id" % 10 === 0)
+      .withColumn("vec_id", $"vec_id" + 100000L), root, 0L)
+    val (_, jobs) = TableProbes.jobsDuring(spark) {
+      Warehouse.readPqCodesAll(spark, root).schema
+      Warehouse.readEmbeddingsByCellAll(spark, root).schema
+    }
+    assert(jobs === 0, "planning the index reads must run no job")
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    Seq[(String, String => DataFrame)](
+      "codes" -> (Warehouse.readPqCodes(spark, _)),
+      "embeddings" -> (Warehouse.readEmbeddingsByCell(spark, _))
+    ).foreach { case (d, read) =>
+      val sidecar = java.nio.file.Paths.get(root, d, "_schema")
+      assert(Files.isRegularFile(sidecar), s"$d has no _schema")
+      val recorded = read(root)
+      val inferred = spark.read.parquet(s"$root/$d")
+      assert(recorded.schema === inferred.schema, d)
+      assert(rows(recorded) === rows(inferred), d)
+      // a base written before the sidecar existed reads by inference
+      Files.delete(sidecar)
+      assert(read(root).schema === inferred.schema, d)
+    }
+  }
+
+  test("a warm serve is a small plan: other probe cells compile no " +
+    "class and submit at most two jobs") {
+    import graft.pipelines.Similarity
+    val emb = Tables(spark, "/root/testdata/sf0.001").embeddings
+    val cents = Similarity.seedCentroids(8, 64)
+    val root = Files.createTempDirectory("graft_pq_warm").toString
+    Warehouse.writePqIndex(emb, root, k = 8, dim = 64, m = 8, ks = 16,
+      centroids = Some(cents),
+      codebooks = Some(Similarity.pqSeedCodebooks(8, 16, 8)),
+      residual = true)
+    val vecs = emb.orderBy("vec_id").select("embedding").as[Seq[Float]]
+      .collect().map(_.map(_.toDouble).toArray)
+    val q1 = vecs.head
+    val p1 = Similarity.probeCellsAt(q1, cents, 2).toSet
+    val q2 = vecs.find(v =>
+      Similarity.probeCellsAt(v, cents, 2).toSet != p1).get
+    def serve(q: Array[Double]) = Warehouse.ivfPqServe(spark, root, q,
+      topK = 5, nprobe = 2, cand = 20).collect().toSeq
+    serve(q1)
+    val ((answer, compiled), jobs) = TableProbes.jobsDuring(spark) {
+      TableProbes.compilesDuring(serve(q2))
+    }
+    assert(compiled === 0L, "the warm plan must not depend on the query")
+    assert(jobs <= 2, s"a warm serve ran $jobs jobs")
+    assert(answer.map(_.getLong(0)).toSet.nonEmpty)
+  }
+
+  test("index verbs release their persists: three CDC syncs leave the " +
+    "session's persisted RDDs as they found them") {
+    import graft.pipelines.Similarity
+    import graft.sources.AtomicTable
+    val root = Files.createTempDirectory("graft_cdc_leak").toString
+    val emb = Tables(spark, "/root/testdata/sf0.001").embeddings
+    val src = AtomicTable(spark, s"$root/table", partCol = "label",
+      defaultKeys = Seq("vec_id"), partType = _.toInt)
+    src.init(emb)
+    Warehouse.writePqIndex(emb, s"$root/idx", k = 8, dim = 64, m = 8,
+      ks = 16, centroids = Some(Similarity.seedCentroids(8, 64)),
+      codebooks = Some(Similarity.pqSeedCodebooks(8, 16, 8)))
+    Warehouse.syncIndexFromTable(spark, src, s"$root/idx")
+    val before = spark.sparkContext.getPersistentRDDs.size
+    Seq(3L, 5L, 7L).foreach { id =>
+      src.upsert(emb.filter($"vec_id" === id)
+        .withColumn("embedding", reverse($"embedding")))
+      assert(Warehouse.syncIndexFromTable(spark, src, s"$root/idx")
+        .updated === 1L)
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size === before)
+  }
+
+  test("serving state: every index verb invalidates it — the serve " +
+    "after each equals a serve on a fresh build of the expected corpus") {
+    import graft.pipelines.Similarity
+    import graft.sources.AtomicTable
+    val emb = Tables(spark, "/root/testdata/sf0.001").embeddings
+    val cents = Similarity.seedCentroids(8, 64)
+    val cb = Similarity.pqSeedCodebooks(8, 16, 8)
+    val q = emb.filter($"vec_id" === 3).select("embedding")
+      .collect()(0).getSeq[Float](0).map(_.toDouble).toArray
+    // a copy of the query row under a fresh id: cosine 1, always top-5
+    def twin(id: Long) = emb.filter($"vec_id" === 3)
+      .withColumn("vec_id", lit(id))
+    def serve(r: String) = Warehouse.ivfPqServe(spark, r, q, topK = 5,
+      nprobe = 2, cand = 20).as[(Long, Double)].collect().toSeq
+    // the reference: a fresh build of `corpus` under `root`'s current
+    // model, served in its own cache scope so its state is freed
+    def fresh(root: String, corpus: DataFrame) = Caches.withCaches { _ =>
+      val ref = Files.createTempDirectory("graft_pq_state_ref").toString
+      Warehouse.writePqIndex(corpus, ref, k = 8, dim = 64, m = 8,
+        ks = 16, centroids = Some(Warehouse.readEmbeddingCentroids(root)),
+        codebooks = Some(Warehouse.readPqCodebooks(root)))
+      serve(ref)
+    }
+    def check(what: String, root: String, corpus: DataFrame) = {
+      val got = serve(root)
+      assert(serve(root) === got, s"$what: a warm serve answers the same")
+      assert(got === fresh(root, corpus), what)
+      got.map(_._1)
+    }
+    // 1. the index verbs, one after another on one index
+    val root = Files.createTempDirectory("graft_pq_state").toString
+    var corpus = emb.filter($"vec_id" % 5 =!= 0)
+    Warehouse.writePqIndex(corpus, root, k = 8, dim = 64, m = 8,
+      ks = 16, centroids = Some(cents), codebooks = Some(cb))
+    check("fresh build", root, corpus)
+    val delta = emb.filter($"vec_id" % 10 === 0).unionByName(twin(900001L))
+    Warehouse.writePqDelta(delta, root, 0L)
+    corpus = corpus.unionByName(delta)
+    assert(check("writePqDelta", root, corpus).contains(900001L))
+    // in place: the base trees' file listing is the only key that moves
+    Warehouse.appendToPqIndex(twin(900002L), root)
+    corpus = corpus.unionByName(twin(900002L))
+    assert(check("appendToPqIndex", root, corpus).contains(900002L))
+    // the same append landed by another process: no write in this
+    // session refreshes Spark's cache of the base trees' paths
+    val side = Files.createTempDirectory("graft_pq_state_side").toString
+    Warehouse.writePqIndex(twin(900003L), side, k = 8, dim = 64, m = 8,
+      ks = 16, centroids = Some(cents), codebooks = Some(cb))
+    Seq("codes", "embeddings").foreach { d =>
+      val from = java.nio.file.Paths.get(side, d)
+      Files.walk(from).iterator().asScala.toSeq
+        .filter(_.getFileName.toString.endsWith(".parquet"))
+        .foreach { f =>
+          val to = java.nio.file.Paths.get(root, d)
+            .resolve(from.relativize(f).toString)
+          Files.createDirectories(to.getParent)
+          Files.move(f, to)
+        }
+    }
+    corpus = corpus.unionByName(twin(900003L))
+    assert(check("a base file landed by another writer", root, corpus)
+      .contains(900003L))
+    val reversed = twin(900001L)
+      .withColumn("embedding", reverse($"embedding"))
+    assert(Warehouse.updateInPqIndex(spark, root, reversed) === 1L)
+    corpus = corpus.filter($"vec_id" =!= 900001L).unionByName(reversed)
+    assert(!check("updateInPqIndex", root, corpus).contains(900001L))
+    assert(Warehouse.deleteFromPqIndex(spark, root, Seq(900002L)) === 1L)
+    corpus = corpus.filter($"vec_id" =!= 900002L)
+    assert(!check("deleteFromPqIndex", root, corpus).contains(900002L))
+    assert(Warehouse.compactPqDeltas(spark, root) > 0)
+    check("compactPqDeltas", root, corpus)
+    assert(Warehouse.compactPqIndex(spark, root) === "v1")
+    check("compactPqIndex", root, corpus)
+    val drifted = emb.filter($"vec_id" % 5 === 0 && $"vec_id" % 10 =!= 0)
+      .filter(Similarity.ivfCellAtNative($"embedding", cents) =!= 4)
+    Warehouse.writePqDelta(drifted, root, 1L)
+    corpus = corpus.unionByName(drifted)
+    check("writePqDelta after the flip", root, corpus)
+    assert(Warehouse.rebuildIfDrifted(spark, root) === Some("v2"))
+    check("rebuildIfDrifted", root, corpus)
+    // 2. CDC sync windows with inserts, updates and deletes; the
+    // superseded state is freed before the next is built, so five
+    // sync+serve rounds hold the persisted RDDs flat
+    val cdc = Files.createTempDirectory("graft_pq_state_cdc").toString
+    val src = AtomicTable(spark, s"$cdc/table", partCol = "label",
+      defaultKeys = Seq("vec_id"), partType = _.toInt)
+    src.init(emb)
+    Warehouse.writePqIndex(emb, s"$cdc/idx", k = 8, dim = 64, m = 8,
+      ks = 16, centroids = Some(cents), codebooks = Some(cb))
+    Warehouse.syncIndexFromTable(spark, src, s"$cdc/idx")
+    check("first sync", s"$cdc/idx", src.read())
+    val labels = emb.select("label").distinct()
+      .collect().map(_.get(0).toString).toSeq
+    var held = -1
+    (0 until 5).foreach { i =>
+      val id = 910000L + i
+      src.upsert(twin(id).unionByName(
+        if (i == 0) twin(id).limit(0)
+        else twin(id - 1).withColumn("embedding", reverse($"embedding"))))
+      if (i > 1) assert(src.deleteWhere(labels, $"vec_id" === id - 2) === 1L)
+      val stats = Warehouse.syncIndexFromTable(spark, src, s"$cdc/idx")
+      assert(stats.inserted === 1L &&
+        stats.updated === (if (i == 0) 0L else 1L) &&
+        stats.deleted === (if (i > 1) 1L else 0L), s"window $i: $stats")
+      val ids = check(s"sync window $i", s"$cdc/idx", src.read())
+      assert(ids.contains(id) && !ids.contains(id - 1))
+      val n = spark.sparkContext.getPersistentRDDs.size
+      if (held < 0) held = n
+      assert(n === held, s"window $i: persisted RDDs grew")
+    }
   }
 
   test("delta commit crash is fully-old and a replay heals; compaction " +
