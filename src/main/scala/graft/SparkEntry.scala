@@ -4304,15 +4304,15 @@ object SparkEntry {
     "n15_index_append" -> ((s, d) => {
       // index maintenance without rebuild: four fifths of the corpus
       // builds the index, the remaining fifth arrives late and APPENDS
-      // — cell-assigned by the persisted centroids, encoded with the
-      // persisted codebooks, new files only (no existing partition
-      // rewritten). Frozen model ⇒ the appended index is identical to
-      // a one-shot build over everything, so n13's oracle still
-      // grades the serve
+      // as one delta shard — cell-assigned by the persisted centroids,
+      // encoded with the persisted codebooks, committed beside the base
+      // (no base file touched). Frozen model ⇒ base ∪ delta serves
+      // exactly what a one-shot build over everything serves, so n13's
+      // oracle still grades the serve
       val root = pqIdxHoldoutFixture(s, d)
       val emb = T(s, d).embeddings
-      Warehouse.appendToPqIndex(
-        emb.filter(col("vec_id") % 5 === 0), root)
+      Warehouse.writePqDelta(
+        emb.filter(col("vec_id") % 5 === 0), root, batchId = 0L)
       val q = emb.filter(col("vec_id") === 0).select("embedding")
         .collect()(0).getSeq[Float](0).map(_.toDouble).toArray
       Warehouse.ivfPqServe(s, root, q, topK = 10, nprobe = 2, cand = 50)
@@ -5389,8 +5389,9 @@ object SparkEntry {
     // identical centroids, codebooks, probes, candidate count, and
     // tie-breaks — so its oracle IS n13's
     ("n14_ivfpq_persist" -> oracleBase("n13_ivfpq_topk")) +
-    // n15 appends to the persisted index under a frozen model — same
-    // cells, same codes, same serve as a one-shot build ⇒ n13's oracle
+    // n15 appends a delta shard to the persisted index under a frozen
+    // model — base ∪ delta has the same cells, codes and serve as a
+    // one-shot build ⇒ n13's oracle
     ("n15_index_append" -> oracleBase("n13_ivfpq_topk")) +
     // n27 tombstones (query row + an id slice) and serves: the live
     // views exclude the dead ids at candidate selection AND rerank, so

@@ -14,7 +14,8 @@ import org.apache.spark.sql.execution.datasources.{FileIndex,
   HadoopFsRelation, InMemoryFileIndex, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField,
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType,
+  FloatType, IntegerType, LongType, MapType, StringType, StructField,
   StructType}
 
 import graft.operators.Relational
@@ -45,12 +46,11 @@ import graft.operators.Relational
   *    read's schema is the sidecars folded in manifest order, and the
   *    partition column takes its written type (a string partition of
   *    `0700` stays the string `0700`).
-  *  - Fallback: when a dir the read needs lacks a full sidecar
-  *    (committed before sidecars, or before they recorded `partCol`)
-  *    or two dirs record different types for one column, the read is
-  *    the union of one scan per dir, the partition type inferred from
-  *    the directory names. [[compact]] moves such a table onto the
-  *    one-scan path.
+  *  - A dir without a full sidecar (committed before sidecars, or
+  *    before they recorded `partCol`) joins the same scan with its
+  *    footer-inferred schema, the partition type taken from its
+  *    directory names; only such a dir costs its read a Spark job.
+  *    [[compact]] rewrites it with a sidecar.
   *  - A manifest file `root/manifest-NNNNNNNNNNNN.txt` maps each data
   *    dir to the partition values readers may take from it (`*` = all),
   *    and records per-stream high-water batch ids (`#txn` lines) for
@@ -82,11 +82,11 @@ import graft.operators.Relational
   * overwrite/compact) lists only its assigned partition dirs.
   *
   * `partType` converts the manifest's STRING partition values back to
-  * the column's runtime type for the fallback union's per-dir
-  * `partCol IN (...)` filters (identity for string partitions;
-  * `_.toInt` for e.g. an IVF `cell` column) — without it a non-string
-  * partition column would compare against string literals and lose
-  * partition pruning.
+  * the column's runtime type for the mutations' `partCol IN (...)`
+  * filters ([[prunedExisting]], [[upsert]], [[deleteWhere]],
+  * [[compact]]; identity for string partitions, `_.toInt` for e.g. an
+  * IVF `cell` column) — without it a non-string partition column would
+  * compare against string literals and lose partition pruning.
   *
   * `statsCol` opts a column into ZONE-MAP data skipping: each commit
   * records the staged dir's min/max of that column as a `#minmax`
@@ -126,8 +126,8 @@ final case class AtomicTable(spark: SparkSession, root: String,
                              bloomCol: Option[String] = None) {
 
   import AtomicTable.{BloomK, ManifestIndex, ManifestRe, OpPrefix, Star,
-    StatsPrefix, TxnPrefix, bloomBitsFor, nullable, recordSchema,
-    recordedSchema, statsCmp}
+    StatsPrefix, TxnPrefix, bloomBitsFor, recordSchema, statsCmp,
+    treeSchema}
 
   private def rootFile = new java.io.File(root)
 
@@ -353,21 +353,6 @@ final case class AtomicTable(spark: SparkSession, root: String,
     }
     (rel, ps)
   }
-
-  /** The schema a dir's `_schema` sidecar records, if it has one. */
-  private def recorded(rel: String): Option[StructType] =
-    recordedSchema(s"$root/$rel")
-
-  /** One data dir as a DataFrame, for the fallback union: the sidecar
-    * (if any) supplies the data columns, so planning submits no
-    * footer-inference job, and the partition column's type is
-    * inferred from the directory names. A dir without a sidecar
-    * predates it and is read by inference.
-    */
-  private def readDir(rel: String): DataFrame =
-    recorded(rel).fold(spark.read)(s =>
-      spark.read.schema(StructType(s.filterNot(isPart))))
-      .parquet(s"$root/$rel")
 
   /** Build the staged dir's `_bloom` sidecar: one batch-sized pass
     * hashes [[bloomCol]] (as string) to [[BloomK]] positions through
@@ -713,71 +698,65 @@ final case class AtomicTable(spark: SparkSession, root: String,
     if (fresh.isEmpty) None else Some(resolve(fresh))
   }
 
-  /** The entries as ONE parquet scan over a [[ManifestIndex]], or —
-    * when a dir lacks a full sidecar or two dirs record different types
-    * for one column — as the union of one scan per dir.
+  /** The entries as ONE parquet scan over a [[ManifestIndex]].
     *
     * Schema EVOLUTION at the read seam: dirs staged before a column
     * existed read it as null, so adding a column (a new quality score,
     * a provenance tag) never rewrites committed data — exactly the
     * add-column semantics of the table formats this manifest mirrors.
     * Column ORDER is manifest order (oldest dir's columns first with
-    * `partCol` after them, later additions appended), the order both
-    * paths produce; [[compact]] folds everything onto the full current
-    * schema. Only ADDITIVE evolution is read as one scan; a column
-    * whose type differs between dirs goes to the union, which widens
-    * it or fails the analysis loudly.
+    * `partCol` after them, later additions appended); [[compact]]
+    * folds everything onto the full current schema. A column recorded
+    * as `int` in one dir and `bigint` in another (or `float` and
+    * `double`) reads as the wider type, which the parquet reader
+    * widens per file; a partition column whose dirs disagree reads as
+    * a string, its directory names verbatim. Any other disagreement
+    * fails here, naming the column and both types.
     */
-  private def resolve(entries: Seq[(String, Seq[String])]): DataFrame =
-    oneScanSchema(entries) match {
-      case Some(schema) =>
-        val part = StructType(schema.filter(isPart))
-        val dirs = entries.flatMap { case (d, syms) =>
-          val base = new HPath(s"$root/$d")
-          val leaves = partDirs(d)
-          val roots =
-            if (syms == Seq(Star) || leaves.forall(l => syms.contains(l._1)))
-              Seq(base) // a whole entry lists its dir
-            else leaves.collect { case (v, name) if syms.contains(v) =>
-              new HPath(base, name) }
-          roots.map(r => new InMemoryFileIndex(spark, Seq(r),
-            Map("basePath" -> base.toString), Some(part)))
-        }
-        spark.baseRelationToDataFrame(HadoopFsRelation(
-          ManifestIndex(dirs, part), part, schema, None,
-          new ParquetFileFormat, Map.empty)(spark))
-      case None =>
-        entries.map { case (d, syms) =>
-          val df = readDir(d)
-          if (syms == Seq(Star)) df
-          else df.filter(col(partCol).isin(syms.map(partType): _*))
-        }.reduce(_.unionByName(_, allowMissingColumns = true))
+  private def resolve(entries: Seq[(String, Seq[String])]): DataFrame = {
+    val schema = scanSchema(entries)
+    val part = StructType(schema.filter(isPart))
+    val dirs = entries.flatMap { case (d, syms) =>
+      val base = new HPath(s"$root/$d")
+      val leaves = partDirs(d)
+      val roots =
+        if (syms == Seq(Star) || leaves.forall(l => syms.contains(l._1)))
+          Seq(base) // a whole entry lists its dir
+        else leaves.collect { case (v, name) if syms.contains(v) =>
+          new HPath(base, name) }
+      roots.map(r => new InMemoryFileIndex(spark, Seq(r),
+        Map("basePath" -> base.toString), Some(part)))
     }
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      ManifestIndex(dirs, part), part, schema, None,
+      new ParquetFileFormat, Map.empty)(spark))
+  }
 
-  /** The one-scan read's schema: every dir's recorded schema with
-    * `partCol` moved after its data columns, folded in manifest order
-    * and made nullable as a parquet read is. None when a dir has no
-    * sidecar, or one without `partCol`, or when two dirs record
-    * different types for one column.
+  /** The read's schema: every dir's schema ([[AtomicTable.treeSchema]])
+    * folded in manifest order on the driver, each column at its first
+    * position and its widest recorded type.
     */
-  private def oneScanSchema(
-      entries: Seq[(String, Seq[String])]): Option[StructType] = {
-    val dirs = entries.map { case (d, _) =>
-      recorded(d).filter(_.exists(isPart))
-    }
-    if (dirs.exists(_.isEmpty)) None
-    else {
-      val resolver = spark.sessionState.conf.resolver
-      val fields = dirs.flatten
-        .flatMap(s => s.filterNot(isPart) ++ s.filter(isPart))
-        .map(f => f.copy(dataType = nullable(f.dataType), nullable = true))
-      val merged = fields.foldLeft(Vector.empty[StructField]) { (acc, f) =>
-        if (acc.exists(g => resolver(g.name, f.name))) acc else acc :+ f
+  private def scanSchema(entries: Seq[(String, Seq[String])]): StructType = {
+    val resolver = spark.sessionState.conf.resolver
+    def wider(f: StructField, g: StructField): DataType =
+      (f.dataType, g.dataType) match {
+        case (a, b) if a == b => a
+        case (IntegerType, LongType) | (LongType, IntegerType) => LongType
+        case (FloatType, DoubleType) | (DoubleType, FloatType) => DoubleType
+        case _ if isPart(f) => StringType
+        case (a, b) => throw new IllegalArgumentException(
+          s"column ${f.name} of the table at $root is recorded as both " +
+            s"${a.simpleString} and ${b.simpleString}; a read can widen " +
+            "only int to bigint and float to double")
       }
-      val agree = fields.forall(f => merged.exists(g =>
-        resolver(g.name, f.name) && g.dataType == f.dataType))
-      if (agree) Some(StructType(merged)) else None
-    }
+    StructType(entries.flatMap { case (d, _) =>
+      treeSchema(spark, s"$root/$d", partCol)
+    }.foldLeft(Vector.empty[StructField]) { (acc, g) =>
+      acc.indexWhere(f => resolver(f.name, g.name)) match {
+        case -1 => acc :+ g
+        case i  => acc.updated(i, acc(i).copy(dataType = wider(acc(i), g)))
+      }
+    })
   }
 
   /** Align an (evolved) writer batch against the committed schema:
@@ -1158,27 +1137,36 @@ object AtomicTable {
   private[sources] def recordSchema(dir: String, schema: StructType): Unit =
     Files.writeString(Path.of(dir, SchemaFile), schema.json)
 
-  /** The schema `dir`'s `_schema` sidecar records, if it has one. */
-  private def recordedSchema(dir: String): Option[StructType] = {
+  /** The schema of the `partitionBy(partCol)` parquet tree at `dir`:
+    * data columns then `partCol`, nullable as a parquet read is. It is
+    * the tree's `_schema` sidecar when that records `partCol`, which
+    * costs no Spark job. A tree written before sidecars (or before they
+    * recorded `partCol`) pays one footer-inference job — its sidecar's
+    * data columns stand in for the footers when it has one — and takes
+    * the partition type from its directory names.
+    */
+  private def treeSchema(spark: SparkSession, dir: String,
+                         partCol: String): StructType = {
+    val isPart = (f: StructField) =>
+      spark.sessionState.conf.resolver(f.name, partCol)
     val sidecar = Path.of(dir, SchemaFile)
-    if (!Files.isRegularFile(sidecar)) None
-    else Some(DataType.fromJson(Files.readString(sidecar))
-      .asInstanceOf[StructType])
+    val recorded =
+      if (!Files.isRegularFile(sidecar)) None
+      else Some(DataType.fromJson(Files.readString(sidecar))
+        .asInstanceOf[StructType])
+    val s = recorded.filter(_.exists(isPart)).getOrElse(
+      recorded.fold(spark.read)(r => spark.read.schema(r))
+        .parquet(dir).schema)
+    StructType((s.filterNot(isPart) ++ s.filter(isPart)).map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
   }
 
-  /** The `partitionBy(partCol)` parquet tree at `dir`, read through its
-    * `_schema` sidecar: data columns then `partCol`, nullable as a
-    * parquet read is, so planning submits no footer-inference job. A
-    * tree without a sidecar (written before it existed) is read by
-    * inference.
+  /** The `partitionBy(partCol)` parquet tree at `dir` (an IVFPQ index
+    * base tree), read under its [[treeSchema]].
     */
   private[sources] def readRecorded(spark: SparkSession, dir: String,
                                     partCol: String): DataFrame =
-    recordedSchema(dir).fold(spark.read) { s =>
-      val (part, data) = s.fields.partition(_.name == partCol)
-      spark.read.schema(StructType((data ++ part).map(f =>
-        f.copy(dataType = nullable(f.dataType), nullable = true))))
-    }.parquet(dir)
+    spark.read.schema(treeSchema(spark, dir, partCol)).parquet(dir)
 
   /** `t` with every nested field, element and value nullable — the
     * schema a parquet read reports whatever the writer declared.

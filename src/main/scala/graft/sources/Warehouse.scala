@@ -127,6 +127,14 @@ object Warehouse {
     * Codes and vectors share the cell assignment by construction, so
     * one probe list selects from both. Both trees record their written
     * schema in a `_schema` sidecar, so their reads infer none.
+    *
+    * A root whose index is already built (its `pqmeta.txt`, written
+    * last, exists) is refused: overwriting the base in place would
+    * leave the delta and tombstone tables coded under the old model
+    * beside it, and a crash mid-write would leave no base at all. A
+    * crashed first build has no `pqmeta.txt` and can be re-run.
+    * Rebuild a live index with [[compactPqIndex]] or
+    * [[rebuildIfDrifted]], which build a fresh version and flip to it.
     */
   def writePqIndex(emb: DataFrame, root0: String, k: Int, dim: Int,
                    m: Int, ks: Int,
@@ -137,6 +145,10 @@ object Warehouse {
                    residual: Boolean = false)
       : Unit = {
     val root = resolveIndexRoot(root0)
+    require(!java.nio.file.Files.exists(
+        java.nio.file.Paths.get(s"$root/pqmeta.txt")),
+      s"an IVFPQ index is already built at $root0; rebuild it with " +
+        "compactPqIndex or rebuildIfDrifted, or write to a fresh root")
     writeEmbeddingsByCell(emb, root, k, dim, vecCol, centroids)
     val cents = readEmbeddingCentroids(root)
     val cb = codebooks.getOrElse(
@@ -213,52 +225,6 @@ object Warehouse {
     out
   }
 
-  /** Append a late-arriving batch to a persisted IVFPQ index WITHOUT
-    * rebuilding it: new rows are assigned to cells by the index's
-    * PERSISTED centroids and encoded with its PERSISTED codebooks (the
-    * model is frozen on append — retraining would silently re-shape
-    * cells and code meanings under the existing entries), then land as
-    * NEW parquet files inside the same `cell=…` partition directories
-    * of both the raw-vector table and the codes table. No existing
-    * file is rewritten, so an append costs O(batch), not O(index) —
-    * the maintenance discipline a 100 TB embedding store needs (daily
-    * crawl increments against a trillion-row index). Because cell
-    * assignment and codes are pure functions of the frozen model, the
-    * appended index is file-layout-aside IDENTICAL to one built from
-    * the unioned corpus with the same centroids/codebooks, and every
-    * serving path answers identically (`n15_index_append` proves it
-    * against n13's oracle; WarehouseSpec pins base+append ≡ full).
-    *
-    * UPDATE-OUTRANKS-APPEND: appended rows carry the implicit update
-    * sequence `_seq = 0`, so appending an id that a later
-    * [[updateInPqIndex]] already touched lands DEAD under the id's
-    * standing tombstone mark (`upto >= 0` never equals `-1`) until a
-    * rebuild re-ingests the live view — same discipline as
-    * takedown-wins for deletes. A stream that wants re-appends to
-    * supersede an earlier update must route those ids through
-    * [[updateInPqIndex]] (which sequences PAST the mark) instead of
-    * the append path.
-    */
-  def appendToPqIndex(batch: DataFrame, root0: String,
-                      idCol: String = "vec_id",
-                      vecCol: String = "embedding"): Unit = {
-    val root = resolveIndexRoot(root0)
-    graft.expressions.GraftFunctions.register(batch.sparkSession)
-    val cents = readEmbeddingCentroids(root)
-    val cb = readPqCodebooks(root)
-    val cell = graft.pipelines.Similarity
-      .ivfCellAtNative(col(vecCol), cents)
-    batch.withColumn("cell", cell)
-      .write.mode(SaveMode.Append).partitionBy("cell")
-      .parquet(s"$root/embeddings")
-    batch.withColumn("cell", cell)
-      .withColumn("code",
-        pqCodeFor(vecCol, cents, cb, readPqResidualFlag(root)))
-      .select(col(idCol), col("cell"), col("code"))
-      .write.mode(SaveMode.Append).partitionBy("cell")
-      .parquet(s"$root/codes")
-  }
-
   /** The two delta-shard stores of a streaming-maintained index — the
     * appended raw vectors and their PQ codes, each an [[AtomicTable]]
     * partitioned by `cell` (manifest commits, OCC via the hard-link
@@ -304,12 +270,23 @@ object Warehouse {
     *  - time travel: each table's manifest history reconstructs the
     *    served index at any append point.
     *
-    * UPDATE-OUTRANKS-APPEND (see [[appendToPqIndex]]): delta rows land
-    * at `_seq = 0`, so a plain re-append of an id that
-    * [[updateInPqIndex]] already updated stays dead under the id's
-    * mark until rebuild. Ingest streams that may re-deliver updated
-    * ids should use [[graft.streaming.IndexStream.startUpdates]] for
-    * those ids, not the append stream.
+    * A late batch is cell-assigned by the PERSISTED centroids and
+    * encoded with the PERSISTED codebooks — retraining on append would
+    * silently re-shape cells and code meanings under the existing
+    * entries. Cell and code are pure functions of that frozen model, so
+    * base ∪ delta serves exactly what a one-shot build over the union
+    * serves (`n15_index_append` proves it against n13's oracle), at
+    * O(batch) cost per append.
+    *
+    * UPDATE-OUTRANKS-APPEND: delta rows land at the implicit update
+    * sequence `_seq = 0`, so appending an id that a later
+    * [[updateInPqIndex]] already touched lands DEAD under the id's
+    * standing tombstone mark (`upto >= 0` never equals `-1`) until a
+    * rebuild re-ingests the live view — the same discipline as
+    * takedown-wins for deletes. Ingest streams that may re-deliver
+    * updated ids should route them through [[updateInPqIndex]] (or
+    * [[graft.streaming.IndexStream.startUpdates]]), which sequences
+    * PAST the mark, not through the append stream.
     */
   def writePqDelta(batch: DataFrame, root: String, batchId: Long,
                    idCol: String = "vec_id",
@@ -1148,11 +1125,11 @@ object Warehouse {
     }
   }
 
-  /** Atomic in-place UPDATE of vectors in the persisted index: the
-    * missing third verb between append ([[appendToPqIndex]] /
-    * [[writePqDelta]]) and delete ([[deleteIdsFromPqIndex]]). Without
-    * it, delete + re-append only composes into "replace" after a full
-    * rebuild — the takedown-wins rule keeps the re-appended row dead.
+  /** Atomic UPDATE of vectors in the persisted index: the third verb
+    * beside append ([[writePqDelta]]) and delete
+    * ([[deleteIdsFromPqIndex]]). Without it, delete + re-append only
+    * composes into "replace" after a full rebuild — the takedown-wins
+    * rule keeps the re-appended row dead.
     *
     * Mechanics — VERSIONED tombstones (Lucene's doc-values-generation
     * discipline): every index row carries an update sequence `_seq`
@@ -1536,7 +1513,7 @@ object Warehouse {
   /** Staleness alarm for the frozen-model index: PSI of the
     * assigned-cell distribution of the committed DELTA shards against
     * the base index. The frozen-model append contract
-    * ([[writePqDelta]], [[appendToPqIndex]]) is only safe while the
+    * ([[writePqDelta]]) is only safe while the
     * appended data still looks like the data the centroids/codebooks
     * were trained on — when the stream drifts, new rows pile into the
     * wrong cells, probe recall decays, and nothing else in the serve
@@ -2195,14 +2172,15 @@ object Warehouse {
     * of that state. The state is keyed by what the driver reads
     * without a Spark job: the resolved `CURRENT` version, the
     * `delta_codes`/`delta_emb`/`delta_tombstones` manifest versions,
-    * and the file listing of the base `codes/` and `embeddings/` trees
-    * ([[appendToPqIndex]] and [[writePqIndex]] write there in place).
-    * Every index verb moves the key, so no serve reads a superseded
-    * state. A repeated serve is the ADC top-`cand` and the rerank
-    * over in-memory rows: no file listing, no schema read, no
-    * tombstone aggregation, and a plan whose generated code does not
-    * depend on the query (the probe set and query vector are
-    * literals passed by reference). The first serve after a commit
+    * and the file listing of the base `codes/` and `embeddings/` trees.
+    * No verb writes into a built base tree ([[writePqIndex]] refuses a
+    * built root), so the listing moves only when the index is deleted
+    * and rebuilt at the same path. Every index verb moves the key, so
+    * no serve reads a superseded state. A repeated serve is the ADC
+    * top-`cand` and the rerank over in-memory rows: no file listing,
+    * no schema read, no tombstone aggregation, and a plan whose
+    * generated code does not depend on the query (the probe set and
+    * query vector are literals passed by reference). The first serve after a commit
     * builds the state inside its own query: it reads EVERY cell of
     * both views once, not only the probed ones — a serve no longer
     * prunes its file scan to the probe cells — so it costs a little
@@ -2263,7 +2241,9 @@ object Warehouse {
 
   /** What an index state's serving views are built from, all read on
     * the driver: the resolved version root, the three delta manifest
-    * versions, and every base file's (path, size, mtime).
+    * versions, and every base file's (path, size, mtime). The listing
+    * is what tells an index deleted and rebuilt at the same path from
+    * the state it replaced when both have empty delta tables.
     */
   private final case class ServeKey(root: String, codes: Long, emb: Long,
                                     tombstones: Long,
@@ -2274,9 +2254,9 @@ object Warehouse {
     * — see [[ivfPqServe]]. Each view carries a per-build tag column
     * while cached: Spark's cache lookup matches cached data by plan,
     * and the tag keeps any other plan over the same files (a verb's
-    * live read, or the next state after an in-place append, whose
-    * parquet relation compares equal by path) from being answered
-    * with this state's rows.
+    * live read, or the next state of an index rebuilt at the same path,
+    * whose parquet relation compares equal by path) from being
+    * answered with this state's rows.
     */
   private def servingState(spark: SparkSession, root: String, r: String,
                            idCol: String,

@@ -1305,29 +1305,31 @@ class WarehouseSpec extends AnyFunSuite {
       .orderBy($"cosine".desc, $"vec_id")
       .as[(Long, Double)].collect().toSeq
     assert(served === exact)
-    // residual append honors the persisted flag: base+append codes
+    // a residual delta honors the persisted flag: base ∪ delta codes
     // equal the one-shot residual build
     val incRoot = Files.createTempDirectory("graft_pq_res_inc").toString
     Warehouse.writePqIndex(emb.filter($"vec_id" % 5 =!= 0), incRoot,
       k = 8, dim = 64, m = 8, ks = 16,
       centroids = Some(cents), codebooks = Some(cbRes), residual = true)
-    Warehouse.appendToPqIndex(emb.filter($"vec_id" % 5 === 0), incRoot)
-    assert(codes(incRoot) === codes(resRoot))
+    Warehouse.writePqDelta(emb.filter($"vec_id" % 5 === 0), incRoot, 0L)
+    assert(Warehouse.readPqCodesAll(spark, incRoot)
+      .select($"vec_id", $"code".cast("string"))
+      .orderBy("vec_id").as[(Long, String)].collect().toSeq ===
+      codes(resRoot))
   }
 
-  test("appendToPqIndex: frozen-model append equals one-shot build, rewrites nothing") {
+  test("writePqDelta: frozen-model append equals one-shot build, touches no base") {
     import graft.pipelines.Similarity
-    def listFiles(dir: String): Map[String, Long] = {
-      val base = java.nio.file.Paths.get(dir)
-      val out = scala.collection.mutable.Map[String, Long]()
-      java.nio.file.Files.walk(base).forEach { p =>
-        val n = p.getFileName.toString
-        if (n.endsWith(".parquet"))
-          out(base.relativize(p).toString) =
-            java.nio.file.Files.getLastModifiedTime(p).toMillis
-      }
-      out.toMap
-    }
+    // every file of the base trees with its (size, mtime)
+    def baseFiles(dir: String): Map[String, (Long, Long)] =
+      Seq("codes", "embeddings").flatMap { d =>
+        val base = java.nio.file.Paths.get(dir, d)
+        Files.walk(base).iterator().asScala
+          .filter(Files.isRegularFile(_)).map { p =>
+            s"$d/${base.relativize(p)}" ->
+              ((Files.size(p), Files.getLastModifiedTime(p).toMillis))
+          }
+      }.toMap
     val emb = Tables(spark, "/root/testdata/sf0.001").embeddings
     val cents = Similarity.seedCentroids(8, 64)
     val cb = Similarity.pqSeedCodebooks(8, 16, 8)
@@ -1335,23 +1337,21 @@ class WarehouseSpec extends AnyFunSuite {
     Warehouse.writePqIndex(emb.filter($"vec_id" % 5 =!= 0), incRoot,
       k = 8, dim = 64, m = 8, ks = 16,
       centroids = Some(cents), codebooks = Some(cb))
-    val before = listFiles(incRoot)
-    Warehouse.appendToPqIndex(emb.filter($"vec_id" % 5 === 0), incRoot)
-    val after = listFiles(incRoot)
-    // append-only: every pre-existing file survives untouched
-    before.foreach { case (f, mtime) =>
-      assert(after.get(f) === Some(mtime), s"rewrote $f")
-    }
-    assert(after.size > before.size)
-    // codes after append = codes of a one-shot build over everything
+    val before = baseFiles(incRoot)
+    Warehouse.writePqDelta(emb.filter($"vec_id" % 5 === 0), incRoot, 0L)
+    // the base stays the immutable build: no file added, changed or gone
+    assert(baseFiles(incRoot) === before)
+    assert(Warehouse.hasPqDeltas(spark, incRoot))
+    // live codes of base ∪ delta = codes of a one-shot build
     val fullRoot = Files.createTempDirectory("graft_pq_full").toString
     Warehouse.writePqIndex(emb, fullRoot, k = 8, dim = 64, m = 8,
       ks = 16, centroids = Some(cents), codebooks = Some(cb))
-    def codes(root: String) = Warehouse.readPqCodes(spark, root)
+    def codes(df: DataFrame) = df
       .select($"vec_id", $"cell".cast("int"),
         $"code".cast("string"))
       .orderBy("vec_id").collect().toSeq
-    assert(codes(incRoot) === codes(fullRoot))
+    assert(codes(Warehouse.readPqCodesLive(spark, incRoot)) ===
+      codes(Warehouse.readPqCodes(spark, fullRoot)))
     // and the serve answers identically
     val q = emb.filter($"vec_id" === 3).select("embedding")
       .collect()(0).getSeq[Float](0).map(_.toDouble).toArray
@@ -1359,7 +1359,19 @@ class WarehouseSpec extends AnyFunSuite {
         topK = 5, nprobe = 2, cand = 20)
       .orderBy($"cosine".desc, $"vec_id")
       .as[(Long, Double)].collect().toSeq
-    assert(serve(incRoot) === serve(fullRoot))
+    val served = serve(incRoot)
+    assert(served === serve(fullRoot))
+    // a second build over the live index is refused before it writes
+    // anything, and the index serves on unchanged
+    val err = intercept[IllegalArgumentException] {
+      Warehouse.writePqIndex(emb, incRoot, k = 8, dim = 64, m = 8,
+        ks = 16, centroids = Some(cents), codebooks = Some(cb))
+    }
+    assert(err.getMessage.contains("compactPqIndex"), err.getMessage)
+    assert(baseFiles(incRoot) === before)
+    graft.Caches.releaseAll()
+    assert(serve(incRoot) === served)
+    graft.Caches.releaseAll()
   }
 
   test("delta tables: replay-fenced, serve ≡ one-shot, compaction " +
@@ -1527,33 +1539,22 @@ class WarehouseSpec extends AnyFunSuite {
     Warehouse.writePqIndex(corpus, root, k = 8, dim = 64, m = 8,
       ks = 16, centroids = Some(cents), codebooks = Some(cb))
     check("fresh build", root, corpus)
+    // the index deleted and rebuilt at the same path by another
+    // process: the delta versions are still 0, so the base trees' file
+    // listing is the only key that moves, and no write in this session
+    // refreshes Spark's cache of the base trees' paths
+    val side = Files.createTempDirectory("graft_pq_state_side").toString
+    corpus = corpus.unionByName(twin(900002L))
+    Warehouse.writePqIndex(corpus, side, k = 8, dim = 64, m = 8,
+      ks = 16, centroids = Some(cents), codebooks = Some(cb))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+    Files.move(java.nio.file.Paths.get(side), java.nio.file.Paths.get(root))
+    assert(check("delete and rebuild at the same root", root, corpus)
+      .contains(900002L))
     val delta = emb.filter($"vec_id" % 10 === 0).unionByName(twin(900001L))
     Warehouse.writePqDelta(delta, root, 0L)
     corpus = corpus.unionByName(delta)
     assert(check("writePqDelta", root, corpus).contains(900001L))
-    // in place: the base trees' file listing is the only key that moves
-    Warehouse.appendToPqIndex(twin(900002L), root)
-    corpus = corpus.unionByName(twin(900002L))
-    assert(check("appendToPqIndex", root, corpus).contains(900002L))
-    // the same append landed by another process: no write in this
-    // session refreshes Spark's cache of the base trees' paths
-    val side = Files.createTempDirectory("graft_pq_state_side").toString
-    Warehouse.writePqIndex(twin(900003L), side, k = 8, dim = 64, m = 8,
-      ks = 16, centroids = Some(cents), codebooks = Some(cb))
-    Seq("codes", "embeddings").foreach { d =>
-      val from = java.nio.file.Paths.get(side, d)
-      Files.walk(from).iterator().asScala.toSeq
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .foreach { f =>
-          val to = java.nio.file.Paths.get(root, d)
-            .resolve(from.relativize(f).toString)
-          Files.createDirectories(to.getParent)
-          Files.move(f, to)
-        }
-    }
-    corpus = corpus.unionByName(twin(900003L))
-    assert(check("a base file landed by another writer", root, corpus)
-      .contains(900003L))
     val reversed = twin(900001L)
       .withColumn("embedding", reverse($"embedding"))
     assert(Warehouse.updateInPqIndex(spark, root, reversed) === 1L)
@@ -1829,20 +1830,40 @@ class WarehouseSpec extends AnyFunSuite {
     assert(tbl.read().columns.toSet === Set("id", "x", "part", "score"))
     assert(tbl.read().count() === 5)
 
-    // a column recorded as int in one dir and bigint in the next is not
-    // additive: the read falls back to the per-dir union, which widens
-    // it to bigint
+    // a column recorded as int in one dir and bigint in the next (and
+    // one recorded as float, then double) reads as the wider type in
+    // one scan, under the vectorized and the row-based parquet reader
+    import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
     val widened = AtomicTable(spark, s"$root/w", partCol = "part",
       defaultKeys = Seq("id"))
-    widened.init(Seq((1L, "a", 10)).toDF("id", "part", "x"))
-    widened.append(Seq((2L, "a", 20L)).toDF("id", "part", "x"))
-    val w = widened.read()
-    assert(TableProbes.scans(w).size === 2, "per-dir union")
-    assert(w.schema("x").dataType === org.apache.spark.sql.types.LongType)
-    assert(w.select("id", "x").as[(Long, Long)].collect().sorted.toSeq ===
-      Seq((1L, 10L), (2L, 20L)))
-    // a sidecar that records only the data columns (no partCol) also
-    // sends the read to the union; compact moves it onto one scan
+    widened.init(Seq((1L, "a", 10, 1.5f)).toDF("id", "part", "x", "y"))
+    widened.append(Seq((2L, "a", 20L, 2.5)).toDF("id", "part", "x", "y"))
+    val vectorized = "spark.sql.parquet.enableVectorizedReader"
+    val prior = spark.conf.getOption(vectorized)
+    try Seq("true", "false").foreach { on =>
+      spark.conf.set(vectorized, on)
+      val w = widened.read()
+      assert(TableProbes.scans(w).size === 1, s"one scan, vectorized=$on")
+      assert(w.schema("x").dataType === LongType)
+      assert(w.schema("y").dataType === DoubleType)
+      assert(w.select("id", "x", "y").as[(Long, Long, Double)].collect()
+        .sorted.toSeq === Seq((1L, 10L, 1.5), (2L, 20L, 2.5)),
+        s"vectorized=$on")
+    } finally prior.fold(spark.conf.unset(vectorized))(
+      spark.conf.set(vectorized, _))
+    // a type the parquet reader cannot widen fails at resolve, naming
+    // the column and both types
+    val clash = AtomicTable(spark, s"$root/c", partCol = "part",
+      defaultKeys = Seq("id"))
+    clash.init(Seq((1L, "a", 10)).toDF("id", "part", "x"))
+    clash.append(Seq((2L, "a", "20")).toDF("id", "part", "x"))
+    val err = intercept[IllegalArgumentException](clash.read())
+    assert(Seq("column x", "int", "string").forall(err.getMessage.contains),
+      err.getMessage)
+    // a sidecar that records only the data columns (no partCol) joins
+    // the same one scan, the partition type taken from the dir names,
+    // and plans with no job; a dir with no sidecar at all pays one
+    // footer-inference job; compact rewrites both with full sidecars
     val legacy = AtomicTable(spark, s"$root/l", partCol = "part",
       defaultKeys = Seq("id"))
     legacy.init(Seq((1L, "a", 10)).toDF("id", "part", "x"))
@@ -1852,11 +1873,35 @@ class WarehouseSpec extends AnyFunSuite {
     legacy.append(Seq((2L, "b", 20)).toDF("id", "part", "x"))
     def legacyRows = legacy.read().select("id", "part", "x")
       .as[(Long, String, Int)].collect().sorted.toSeq
-    assert(TableProbes.scans(legacy.read()).size === 2, "per-dir union")
+    val (plan, planJobs) = TableProbes.jobsDuring(spark)(legacy.read())
+    assert(planJobs === 0, "a data-only sidecar plans with no job")
+    assert(TableProbes.scans(plan).size === 1, "one scan")
+    assert(plan.schema("part").dataType === StringType)
+    assert(legacyRows === Seq((1L, "a", 10), (2L, "b", 20)))
+    Files.delete(legacyDir.toPath.resolve("_schema"))
+    val (bare, bareJobs) = TableProbes.jobsDuring(spark)(legacy.read())
+    assert(bareJobs === 1, "a sidecar-less dir costs one inference job")
+    assert(TableProbes.scans(bare).size === 1, "one scan")
     assert(legacyRows === Seq((1L, "a", 10), (2L, "b", 20)))
     legacy.compact()
+    assert(legacy.dataDirCount === 1)
+    assert(TableProbes.jobsDuring(spark)(legacy.read())._2 === 0)
     assert(TableProbes.scans(legacy.read()).size === 1)
     assert(legacyRows === Seq((1L, "a", 10), (2L, "b", 20)))
+    // a partition column two dirs type differently (numeric-looking dir
+    // names inferred as int, a later sidecar's string) reads as a
+    // string: the dir names verbatim
+    val mixed = AtomicTable(spark, s"$root/m", partCol = "part",
+      defaultKeys = Seq("id"))
+    mixed.init(Seq((1L, "0700", 10)).toDF("id", "part", "x"))
+    val Array(mixedDir) = new java.io.File(s"$root/m/data").listFiles()
+    Files.delete(mixedDir.toPath.resolve("_schema"))
+    assert(spark.read.parquet(mixedDir.toString).schema("part").dataType ===
+      org.apache.spark.sql.types.IntegerType, "the dir names infer int")
+    mixed.append(Seq((2L, "AAPL", 20)).toDF("id", "part", "x"))
+    assert(mixed.read().schema("part").dataType === StringType)
+    assert(mixed.read().select("id", "part").as[(Long, String)].collect()
+      .sorted.toSeq === Seq((1L, "0700"), (2L, "AAPL")))
   }
 
   test("zone-map stats skip non-intersecting commits; pruning never " +
