@@ -23,12 +23,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * [[withTinyPlan]] therefore disables AQE around a verb's plan
   * executions ONLY when the bytes the verb can possibly touch are
-  * provably under [[MinBytes]] (256 MB): the on-disk size of the
-  * table or index tree it reads (short-circuit-walked, so a 100 TB
-  * tree stops at the cap instead of listing it) plus Catalyst's size
-  * estimate of the caller's batch plan. Above the threshold nothing
-  * changes — big commits keep AQE and all its protections, so this is
-  * a small-input fast path, not a local-mode tuning.
+  * provably under [[MinBytes]] (256 MB). Every maintenance verb gets
+  * that byte count from ONE estimate, [[touchedBytes]]: the on-disk
+  * size of each table or index tree the verb reads (short-circuit-
+  * walked, so a 100 TB tree stops at the cap instead of listing it)
+  * plus Catalyst's size estimate of each batch frame it is handed,
+  * added with saturation at `Long.MaxValue` — an astronomically
+  * pessimistic join estimate therefore reads as "huge", never wraps
+  * negative into the tiny path. Above the threshold nothing changes —
+  * big commits keep AQE and all its protections, so this is a
+  * small-input fast path, not a local-mode tuning.
   */
 object Adaptive {
 
@@ -38,7 +42,7 @@ object Adaptive {
     * shuffle inside the verb fits a single post-coalesce partition —
     * exactly the regime where AQE's per-stage jobs buy nothing.
     */
-  private[sources] val MinBytes: Long = 256L * 1024 * 1024
+  private[graft] val MinBytes: Long = 256L * 1024 * 1024
 
   /** Recursive on-disk byte size of `path`, short-circuited once the
     * running sum crosses `cap` — the gate only needs "tiny or not",
@@ -83,6 +87,15 @@ object Adaptive {
     val b = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (b.isValidLong) b.toLong else Long.MaxValue
   }
+
+  /** The gate's one byte estimate (see above): the trees `dirs`, each
+    * walked up to [[MinBytes]], plus each of `frames`' [[planBytes]],
+    * summed with saturation at Long.MaxValue. No job runs.
+    */
+  def touchedBytes(dirs: Seq[String], frames: DataFrame*): Long =
+    (dirs.map(dirBytesAtMost(_, MinBytes)) ++ frames.map(planBytes))
+      .foldLeft(0L)((sum, b) =>
+        if (b > Long.MaxValue - sum) Long.MaxValue else sum + b)
 
   private val AqeKey = "spark.sql.adaptive.enabled"
 

@@ -441,17 +441,14 @@ final case class AtomicTable(spark: SparkSession, root: String,
 
   /** Tiny-commit fast path (guide §2): a mutation's plans are bounded
     * by this table's on-disk tree plus the caller's batch — when both
-    * are provably under [[Adaptive.MinBytes]], run the commit without
-    * AQE (whose per-exchange stage jobs dominate KB-scale commits; see
-    * [[Adaptive.withTinyPlan]]). Large tables or batches are
-    * untouched.
+    * are provably small ([[Adaptive.touchedBytes]]), run the commit
+    * without AQE (whose per-exchange stage jobs dominate KB-scale
+    * commits; see [[Adaptive.withTinyPlan]]). Large tables or batches
+    * are untouched.
     */
   private def withTinyCommit[A](batch: Option[DataFrame])(f: => A): A =
-    Adaptive.withTinyPlan(spark, {
-      val cap = Adaptive.MinBytes
-      Adaptive.dirBytesAtMost(root, cap) +
-        batch.map(Adaptive.planBytes).getOrElse(0L)
-    })(f)
+    Adaptive.withTinyPlan(spark,
+      Adaptive.touchedBytes(Seq(root), batch.toSeq: _*))(f)
 
   /** Initialize (or replace) the table with `rows` as version+1. With
     * `txn`, the seed commit records the (stream, batchId) mark and a

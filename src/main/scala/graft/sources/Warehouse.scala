@@ -2,7 +2,8 @@ package graft.sources
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, SaveMode,
+  SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Physical layouts beside the engine's tables-of-record:
@@ -234,16 +235,21 @@ object Warehouse {
     */
   def pqDeltaEmbTable(spark: SparkSession, root: String,
                       failpoint: String => Unit = _ => ()): AtomicTable =
-    AtomicTable(spark, s"${resolveIndexRoot(root)}/delta_emb",
-      partCol = "cell",
-      defaultKeys = Seq("vec_id"), failpoint = failpoint,
-      partType = _.toInt)
+    cellTable(spark, s"${resolveIndexRoot(root)}/delta_emb", "vec_id",
+      failpoint)
   def pqDeltaCodeTable(spark: SparkSession, root: String,
                        failpoint: String => Unit = _ => ()): AtomicTable =
-    AtomicTable(spark, s"${resolveIndexRoot(root)}/delta_codes",
-      partCol = "cell",
-      defaultKeys = Seq("vec_id"), failpoint = failpoint,
-      partType = _.toInt)
+    cellTable(spark, s"${resolveIndexRoot(root)}/delta_codes", "vec_id",
+      failpoint)
+
+  /** An index-side [[AtomicTable]] at `dir` (no version resolution):
+    * partitioned by the integer `cell`, keyed by `key` — the shape of
+    * every delta and tombstone table.
+    */
+  private def cellTable(spark: SparkSession, dir: String, key: String,
+                        failpoint: String => Unit = _ => ()): AtomicTable =
+    AtomicTable(spark, dir, partCol = "cell", defaultKeys = Seq(key),
+      failpoint = failpoint, partType = _.toInt)
 
   /** Streaming delta segment: one micro-batch's rows, cell-assigned
     * and PQ-coded by the index's FROZEN model, committed into the
@@ -311,10 +317,7 @@ object Warehouse {
     // tiny-verb fast path (guide §2): a micro-batch delta shard's
     // plans touch the index tree + the batch — AQE's per-stage jobs
     // are pure overhead when both are provably small
-    Adaptive.withTinyPlan(spark, {
-      val cap = Adaptive.MinBytes
-      Adaptive.dirBytesAtMost(r, cap) + Adaptive.planBytes(batch)
-    }) {
+    Adaptive.withTinyPlan(spark, Adaptive.touchedBytes(Seq(r), batch)) {
     val cents = readEmbeddingCentroids(r)
     val cb = readPqCodebooks(r)
     val cell = graft.pipelines.Similarity
@@ -374,36 +377,11 @@ object Warehouse {
   def hasPqDeltas(spark: SparkSession, root: String): Boolean =
     pqDeltaCodeTable(spark, root).hasData
 
-  /** Reproducible trainer handoff: export a PINNED committed version
-    * of a table to hash-sharded JSONL plus a provenance manifest — the
-    * artifact that answers "reproduce the corpus this checkpoint
-    * trained on" months later, after the table has moved on.
-    *
-    *  - the snapshot is [[AtomicTable.readVersion]], so the export is
-    *    a function of (version, salt, shards) alone — later commits
-    *    cannot change it, and vacuum past the version fails it FAST
-    *    (whole-or-error) instead of shipping a partial corpus;
-    *  - shard = salted 60-bit md5 of the id, mod `shards`:
-    *    deterministic, rebalanced only by changing the salt, never by
-    *    cluster layout; one directory per shard so loaders stream
-    *    shards independently;
-    *  - the returned manifest is computed from the EXPORTED FILES,
-    *    not the plan — per shard, the row count and a `bit_xor` of
-    *    per-row canonical fingerprints (order-independent, so
-    *    partition layout cannot perturb it; any changed, added, or
-    *    dropped row flips it). Re-exporting the same version yields
-    *    the identical manifest — the equality a training run records
-    *    and an auditor replays;
-    *  - a `_PROVENANCE.json` header (version, salt, shards, source
-    *    root) rides with the shards.
-    *
-    * `canon` is the caller's canonical row fingerprint (a column over
-    * the re-read frame), e.g. a salted md5 of the id and payload.
-    * Output: `shard, n_rows, content_xor`.
-    */
-  /** Minimal JSON string escaping for the provenance sidecars: quotes,
-    * backslashes, and control characters — the headers must stay valid
-    * JSON for ANY salt or table root.
+  // ---- snapshot wire format ------------------------------------------
+
+  /** Minimal JSON string escaping for the sidecars: quotes, backslashes,
+    * and control characters — the headers must stay valid JSON for ANY
+    * salt or table root. [[jsonUnstr]] is its inverse.
     */
   private def jsonStr(s: String): String =
     "\"" + s.flatMap {
@@ -413,49 +391,194 @@ object Warehouse {
       case c => c.toString
     } + "\""
 
+  /** Decode a [[jsonStr]] body (without its quotes): `\uXXXX` is that
+    * character, any other escaped character stands for itself.
+    */
+  private def jsonUnstr(s: String): String =
+    """\\(?:u([0-9a-fA-F]{4})|(.))""".r.replaceAllIn(s, m =>
+      java.util.regex.Matcher.quoteReplacement(
+        if (m.group(1) != null) Integer.parseInt(m.group(1), 16).toChar.toString
+        else m.group(2)))
+
+  /** One sidecar line: a flat JSON object, fields in order, string
+    * values through [[jsonStr]], anything else as its `toString`.
+    */
+  private def jsonLine(fields: (String, Any)*): String =
+    fields.map {
+      case (k, v: String) => s"${jsonStr(k)}:${jsonStr(v)}"
+      case (k, v) => s"${jsonStr(k)}:$v"
+    }.mkString("{", ",", "}")
+
+  private def writeSidecar(dir: String, name: String,
+                           lines: Seq[String]): Unit =
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/$name"),
+      lines.mkString("", "\n", "\n"))
+
+  /** Fingerprint tuples as manifest lines, fields named by `cols`. */
+  private def fpLines(cols: Seq[String], fps: Seq[Product]): Seq[String] =
+    fps.map(f => jsonLine(cols.zip(f.productIterator.toSeq): _*))
+
+  private val ShardCols = Seq("shard", "n_rows", "content_xor")
+  private val DeltaCols = Seq("shard", "change_type", "n_rows", "content_xor")
+  private val ShardLine =
+    """\{"shard":(-?\d+),"n_rows":(-?\d+),"content_xor":(-?\d+)\}""".r
+  private val DeltaLine = ("""\{"shard":(-?\d+),"change_type":"(\w+)",""" +
+    """"n_rows":(-?\d+),"content_xor":(-?\d+)\}""").r
+  private val EndpointLine =
+    """\{"endpoint":"(v[12])","n_rows":(-?\d+),"content_xor":(-?\d+)\}""".r
+  private val ModelLine = """\{"model":"([^"]+)","md5":"([0-9a-f]+)"\}""".r
+
+  private def requireShardArgs(shards: Int, salt: String): Unit = {
+    require(shards > 0, "shards must be positive")
+    require(!salt.contains("#"), "snapshot salt must not contain '#'")
+  }
+
+  /** Write `rows` in the snapshot wire format and return the shard
+    * fingerprints recomputed from the written files. The format, shared
+    * by the six snapshot verbs ([[exportSnapshot]]/[[importSnapshot]],
+    * [[exportSnapshotDelta]]/[[applySnapshotDelta]],
+    * [[exportPqIndexSnapshot]]/[[importPqIndexSnapshot]]):
+    *
+    *  - rows: JSON lines, one `shard=N` directory per shard; shard =
+    *    salted 60-bit md5 of `salt#id`, mod `shards` — deterministic,
+    *    rebalanced only by changing the salt, never by cluster layout,
+    *    so loaders stream shards independently. `shards` must be
+    *    positive and the salt must not contain `#`, which would make
+    *    the `salt#id` split ambiguous ([[requireShardArgs]]);
+    *  - shard fingerprint ([[shardFps]]): per shard (per shard and
+    *    `change_type` for a delta) the row count and the
+    *    order-independent `bit_xor` of a per-row 64-bit fingerprint
+    *    column, computed from the FILES re-read under the written
+    *    frame's schema — never JSON inference, which would re-type a
+    *    "007" string. Partition layout cannot perturb it; one changed,
+    *    added or dropped row flips it, and re-exporting the same input
+    *    yields the identical manifest. A whole-frame fingerprint
+    *    ([[frameFp]]: a delta's endpoints, a destination's contents) is
+    *    the same (count, `bit_xor`) over one frame, (0, 0) when empty;
+    *  - `_MANIFEST.json`: one flat JSON object per line ([[jsonLine]])
+    *    — shard lines `shard, n_rows, content_xor` (a delta adds
+    *    `change_type` after `shard`), a delta's endpoint lines
+    *    `endpoint, n_rows, content_xor`, an index's model lines
+    *    `model, md5`. Importers parse every line strictly: a line of no
+    *    known shape refuses the import;
+    *  - `_PROVENANCE.json`: one flat JSON object naming what was
+    *    exported (versions, salt, shard count, source root; an index
+    *    adds its id column and row schema), strings escaped by
+    *    [[jsonStr]] and read back by [[provField]], so any salt or root
+    *    round-trips;
+    *  - importers recompute the shard lines from the files and refuse
+    *    WHOLE, before any commit, unless they equal the manifest's
+    *    ([[verifyShards]]), naming the divergent lines.
+    *
+    * Both sidecars are underscore-prefixed, so no data reader sees them.
+    */
+  private def writeShards(rows: DataFrame, outDir: String, shards: Int,
+                          salt: String, idCol: String, fp: Column,
+                          keys: String*): DataFrame = {
+    rows.withColumn("shard",
+        graft.functions.MarketFunctions.md5Hash60(
+          concat(lit(s"$salt#"), col(idCol).cast("string"))) % shards)
+      .write.mode(SaveMode.Overwrite).partitionBy("shard").json(outDir)
+    shardFps(rows.sparkSession.read.schema(rows.schema).json(outDir), fp,
+      keys: _*)
+  }
+
+  /** Per-shard (and per `keys`) `n_rows, content_xor` of `fp` over
+    * re-read shard files, ordered — see [[writeShards]].
+    */
+  private def shardFps(files: DataFrame, fp: Column,
+                       keys: String*): DataFrame =
+    files.withColumn("_fp", fp)
+      .groupBy(col("shard").cast("long").as("shard") +: keys.map(col): _*)
+      .agg(count(lit(1)).as("n_rows"),
+        expr("bit_xor(_fp)").as("content_xor"))
+      .orderBy("shard", keys: _*)
+
+  /** Whole-frame (rows, `bit_xor` of `fp`) — see [[writeShards]]. */
+  private def frameFp(df: DataFrame, fp: Column): (Long, Long) = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.withColumn("_fp", fp)
+      .agg(count(lit(1)), coalesce(expr("bit_xor(_fp)"), lit(0L)))
+      .as[(Long, Long)].head()
+  }
+
+  /** Refuse — before anything commits — unless the fingerprints
+    * recomputed from `files` equal the `manifest` lines.
+    */
+  private def verifyShards[T: Encoder: Ordering](files: DataFrame,
+                                                 fp: Column,
+                                                 manifest: Seq[T],
+                                                 refusal: String,
+                                                 keys: String*): Unit = {
+    val got = shardFps(files, fp, keys: _*).as[T].collect().toSeq
+    if (got != manifest) {
+      val bad = (manifest.toSet diff got.toSet) ++
+        (got.toSet diff manifest.toSet)
+      throw new IllegalStateException(s"$refusal; divergent shards " +
+        s"(expected/found): ${bad.toSeq.sorted}")
+    }
+  }
+
+  /** The non-blank `_MANIFEST.json` lines of the export dir `dir`
+    * (`what`: "an exportSnapshot", "a delta-export", ...).
+    */
+  private def manifestLines(dir: String, what: String): Seq[String] = {
+    val mf = java.nio.file.Paths.get(s"$dir/_MANIFEST.json")
+    require(java.nio.file.Files.exists(mf),
+      s"no _MANIFEST.json under $dir — not $what dir")
+    java.nio.file.Files.readAllLines(mf).asScala.map(_.trim)
+      .filter(_.nonEmpty).toSeq
+  }
+
+  /** Every line through `parse`; a line it does not match refuses. */
+  private def parseLines[T](lines: Seq[String], what: String)(
+      parse: PartialFunction[String, T]): Seq[T] =
+    lines.map(l => parse.applyOrElse(l, (l: String) =>
+      throw new IllegalStateException(s"unparseable $what line: $l")))
+
+  /** The decoded string field `key` of a `_PROVENANCE.json` header. */
+  private def provField(prov: String, key: String): String = {
+    val m = (s""""$key":"((?:[^"\\\\]|\\\\.)*)"""").r.findFirstMatchIn(prov)
+    require(m.isDefined, s"provenance header missing $key")
+    jsonUnstr(m.get.group(1))
+  }
+
+  /** Reproducible trainer handoff: export a PINNED committed version
+    * of a table in the snapshot wire format ([[writeShards]]) — the
+    * artifact that answers "reproduce the corpus this checkpoint
+    * trained on" months later, after the table has moved on.
+    *
+    *  - the snapshot is [[AtomicTable.readVersion]], so the export is
+    *    a function of (version, salt, shards) alone — later commits
+    *    cannot change it, and vacuum past the version fails it FAST
+    *    (whole-or-error) instead of shipping a partial corpus;
+    *  - the returned manifest is the identical one a re-export of the
+    *    same version writes — the equality a training run records and
+    *    an auditor replays;
+    *  - `_PROVENANCE.json` records version, salt, shards and the
+    *    source root.
+    *
+    * `canon` is the caller's canonical row fingerprint (a column over
+    * the re-read frame), e.g. a salted md5 of the id and payload.
+    * Output: `shard, n_rows, content_xor`.
+    */
   def exportSnapshot(spark: SparkSession, tbl: AtomicTable,
                      version: Long, outDir: String, shards: Int,
                      salt: String, idCol: String,
                      canon: Column): DataFrame = {
-    require(shards > 0, "shards must be positive")
-    // '#' joins salt and id in the shard hash; a salt containing '#'
-    // would make that concatenation ambiguous across (salt, id) splits
-    require(!salt.contains("#"), "snapshot salt must not contain '#'")
+    requireShardArgs(shards, salt)
     // tiny-handoff fast path (guide §2): everything the export scans
     // is the pinned table tree — see [[Adaptive.withTinyPlan]]
-    Adaptive.withTinyPlan(spark,
-      Adaptive.dirBytesAtMost(tbl.root, Adaptive.MinBytes)) {
-    val snap = tbl.readVersion(version)
-    snap.withColumn("shard",
-        graft.functions.MarketFunctions.md5Hash60(
-          concat(lit(s"$salt#"), col(idCol).cast("string"))) % shards)
-      .write.mode(SaveMode.Overwrite).partitionBy("shard").json(outDir)
-    // read back under the SNAPSHOT's schema, not JSON inference: the
-    // import side recomputes fingerprints under the caller's true
-    // schema, and a string column of numeric-looking values ("007")
-    // would otherwise infer differently here and poison the manifest
-    val manifest = spark.read.schema(snap.schema).json(outDir)
-      .withColumn("_fp", canon)
-      .groupBy(col("shard").cast("long").as("shard"))
-      .agg(count(lit(1)).as("n_rows"),
-        expr("bit_xor(_fp)").as("content_xor"))
-    // the manifest is shard-cardinality-sized (a handful of rows);
-    // collecting it makes it a sidecar FILE, the artifact the import
-    // side verifies against — underscore-prefixed so no data reader
-    // ever sees it
+    Adaptive.withTinyPlan(spark, Adaptive.touchedBytes(Seq(tbl.root))) {
     import spark.implicits._
-    val rows = manifest.orderBy("shard")
-      .as[(Long, Long, Long)].collect().toSeq
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$outDir/_PROVENANCE.json"),
-      s"""{"version":$version,"salt":${jsonStr(salt)},""" +
-        s""""shards":$shards,"table":${jsonStr(tbl.root)}}\n""")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$outDir/_MANIFEST.json"),
-      rows.map { case (sh, n, x) =>
-        s"""{"shard":$sh,"n_rows":$n,"content_xor":$x}"""
-      }.mkString("", "\n", "\n"))
-    rows.toDF("shard", "n_rows", "content_xor")
+    val rows = writeShards(tbl.readVersion(version), outDir, shards, salt,
+      idCol, canon).as[(Long, Long, Long)].collect().toSeq
+    writeSidecar(outDir, "_PROVENANCE.json", Seq(jsonLine(
+      "version" -> version, "salt" -> salt, "shards" -> shards,
+      "table" -> tbl.root)))
+    writeSidecar(outDir, "_MANIFEST.json", fpLines(ShardCols, rows))
+    rows.toDF(ShardCols: _*)
     }
   }
 
@@ -464,11 +587,8 @@ object Warehouse {
     * restore it into `dest` — "reproduce the corpus on another
     * cluster", refusing loudly on ANY fingerprint mismatch.
     *
-    *  - verification recomputes, from the exported FILES, the same
-    *    per-shard (row count, order-independent `bit_xor` of `canon`)
-    *    the exporter wrote: one changed, added, or dropped row flips
-    *    its shard's fingerprint and the import refuses WHOLE — no
-    *    partial restore ever lands (the refusal happens before any
+    *  - verification is [[verifyShards]]: the import refuses WHOLE —
+    *    no partial restore ever lands (the refusal happens before any
     *    commit);
     *  - `canon` is the same canonical-fingerprint expression the
     *    export used — part of the handoff contract, like the salt;
@@ -489,41 +609,19 @@ object Warehouse {
     import spark.implicits._
     // tiny-handoff fast path: the verify + restore scans are bounded
     // by the export dir and the destination tree
-    Adaptive.withTinyPlan(spark, {
-      val cap = Adaptive.MinBytes
-      Adaptive.dirBytesAtMost(exportDir, cap) +
-        Adaptive.dirBytesAtMost(dest.root, cap)
-    }) {
-    val mf = java.nio.file.Paths.get(s"$exportDir/_MANIFEST.json")
-    require(java.nio.file.Files.exists(mf),
-      s"no _MANIFEST.json under $exportDir — not an exportSnapshot dir")
-    val pat =
-      """\{"shard":(-?\d+),"n_rows":(-?\d+),"content_xor":(-?\d+)\}""".r
-    val manifest = java.nio.file.Files.readAllLines(mf).toArray
-      .map(_.toString.trim).filter(_.nonEmpty).toSeq.map {
-        case pat(sh, n, x) => (sh.toLong, n.toLong, x.toLong)
-        case l => throw new IllegalStateException(
-          s"unparseable manifest line: $l")
-      }
-    val files = spark.read.schema(schema).json(exportDir)
-    val got = files.withColumn("_fp", canon)
-      .groupBy(col("shard").cast("long").as("shard"))
-      .agg(count(lit(1)).as("n_rows"),
-        expr("bit_xor(_fp)").as("content_xor"))
-      .orderBy("shard").as[(Long, Long, Long)].collect().toSeq
-    if (got != manifest) {
-      val bad = (manifest.toSet diff got.toSet) ++
-        (got.toSet diff manifest.toSet)
-      throw new IllegalStateException(
-        "snapshot fingerprint mismatch — refusing to restore; " +
-          s"divergent shards (expected/found): ${bad.toSeq.sorted}")
+    Adaptive.withTinyPlan(spark,
+      Adaptive.touchedBytes(Seq(exportDir, dest.root))) {
+    val manifest = parseLines(
+        manifestLines(exportDir, "an exportSnapshot"), "manifest") {
+      case ShardLine(sh, n, x) => (sh.toLong, n.toLong, x.toLong)
     }
+    val files = spark.read.schema(schema).json(exportDir)
+    verifyShards(files, canon, manifest,
+      "snapshot fingerprint mismatch — refusing to restore")
     val wantRows = manifest.map(_._2).sum
     val wantXor = manifest.map(_._3).foldLeft(0L)(_ ^ _)
     if (dest.hasData) {
-      val (haveRows, haveXor) = dest.read().withColumn("_fp", canon)
-        .agg(count(lit(1)), coalesce(expr("bit_xor(_fp)"), lit(0L)))
-        .as[(Long, Long)].head()
+      val (haveRows, haveXor) = frameFp(dest.read(), canon)
       if (haveRows != wantRows || (haveRows > 0 && haveXor != wantXor))
         throw new IllegalStateException(
           "destination table diverges from the snapshot " +
@@ -541,90 +639,64 @@ object Warehouse {
     * not a re-export of the corpus. The change set is
     * [[AtomicTable.changesBetween]] (manifest-diff: unchanged commits
     * cancel by identity without being read), each row tagged
-    * `change_type` insert/delete, hash-sharded exactly like
-    * [[exportSnapshot]]; `_MANIFEST.json` carries per
-    * (shard, change_type) row counts and order-independent `bit_xor`
-    * fingerprints recomputed FROM the exported files under the
-    * snapshot's pinned schema, and `_PROVENANCE.json` records both
-    * version endpoints. The manifest ALSO carries whole-table
-    * (rows, `bit_xor`) fingerprints of BOTH endpoints — v1 and v2 in
-    * full — so [[applySnapshotDelta]] can refuse a destination that is
-    * not actually at v1 and verify the applied result equals v2: the
-    * delta's own shards were always verified, but without endpoint
-    * fingerprints a valid delta applied to a diverged restore would
-    * silently land a mongrel table (absorbed deletes, wrong-row insert
-    * dedup). Output: `shard, change_type, n_rows, content_xor`.
+    * `change_type` insert/delete, written in the snapshot wire format
+    * ([[writeShards]]) with one manifest line per
+    * (shard, change_type); `_PROVENANCE.json` records both version
+    * endpoints. The manifest ALSO carries whole-table fingerprints of
+    * BOTH endpoints — v1 and v2 in full — so [[applySnapshotDelta]]
+    * can refuse a destination that is not actually at v1 and verify
+    * the applied result equals v2: the delta's own shards were always
+    * verified, but without endpoint fingerprints a valid delta applied
+    * to a diverged restore would silently land a mongrel table
+    * (absorbed deletes, wrong-row insert dedup). Output:
+    * `shard, change_type, n_rows, content_xor`.
     */
   def exportSnapshotDelta(spark: SparkSession, tbl: AtomicTable,
                           v1: Long, v2: Long, outDir: String,
                           shards: Int, salt: String, idCol: String,
                           canon: Column): DataFrame = {
-    require(shards > 0, "shards must be positive")
-    require(!salt.contains("#"), "snapshot salt must not contain '#'")
+    requireShardArgs(shards, salt)
     // tiny-handoff fast path: the delta and both endpoint scans are
     // bounded by the table tree
-    Adaptive.withTinyPlan(spark,
-      Adaptive.dirBytesAtMost(tbl.root, Adaptive.MinBytes)) {
-    val delta = tbl.changesBetween(v1, v2)
-    delta.withColumn("shard",
-        graft.functions.MarketFunctions.md5Hash60(
-          concat(lit(s"$salt#"), col(idCol).cast("string"))) % shards)
-      .write.mode(SaveMode.Overwrite).partitionBy("shard").json(outDir)
-    val manifest = spark.read.schema(delta.schema).json(outDir)
-      .withColumn("_fp", canon)
-      .groupBy(col("shard").cast("long").as("shard"), col("change_type"))
-      .agg(count(lit(1)).as("n_rows"),
-        expr("bit_xor(_fp)").as("content_xor"))
+    Adaptive.withTinyPlan(spark, Adaptive.touchedBytes(Seq(tbl.root))) {
     import spark.implicits._
-    val rows = manifest.orderBy("shard", "change_type")
+    val rows = writeShards(tbl.changesBetween(v1, v2), outDir, shards,
+        salt, idCol, canon, "change_type")
       .as[(Long, String, Long, Long)].collect().toSeq
-    // whole-table endpoint fingerprints: same (rows, order-independent
-    // bit_xor of canon) shape as the shard lines, computed over the
-    // PINNED versions — one scan each, paid once at export so every
-    // future apply can verify its destination instead of trusting it
-    def endpointFp(v: Long): (Long, Long) =
-      tbl.readVersion(v).withColumn("_fp", canon)
-        .agg(count(lit(1)), coalesce(expr("bit_xor(_fp)"), lit(0L)))
-        .as[(Long, Long)].head()
-    val (n1, x1) = endpointFp(v1)
-    val (n2, x2) = endpointFp(v2)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$outDir/_PROVENANCE.json"),
-      s"""{"v1":$v1,"v2":$v2,"salt":${jsonStr(salt)},""" +
-        s""""shards":$shards,"table":${jsonStr(tbl.root)}}\n""")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$outDir/_MANIFEST.json"),
-      (Seq(
-        s"""{"endpoint":"v1","n_rows":$n1,"content_xor":$x1}""",
-        s"""{"endpoint":"v2","n_rows":$n2,"content_xor":$x2}""") ++
-        rows.map { case (sh, ct, n, x) =>
-          s"""{"shard":$sh,"change_type":${jsonStr(ct)},""" +
-            s""""n_rows":$n,"content_xor":$x}"""
-        }).mkString("", "\n", "\n"))
-    rows.toDF("shard", "change_type", "n_rows", "content_xor")
+    // whole-table endpoint fingerprints over the PINNED versions — one
+    // scan each, paid once at export so every future apply can verify
+    // its destination instead of trusting it
+    val (n1, x1) = frameFp(tbl.readVersion(v1), canon)
+    val (n2, x2) = frameFp(tbl.readVersion(v2), canon)
+    writeSidecar(outDir, "_PROVENANCE.json", Seq(jsonLine(
+      "v1" -> v1, "v2" -> v2, "salt" -> salt, "shards" -> shards,
+      "table" -> tbl.root)))
+    writeSidecar(outDir, "_MANIFEST.json",
+      jsonLine("endpoint" -> "v1", "n_rows" -> n1, "content_xor" -> x1) +:
+        jsonLine("endpoint" -> "v2", "n_rows" -> n2, "content_xor" -> x2) +:
+        fpLines(DeltaCols, rows))
+    rows.toDF(DeltaCols: _*)
     }
   }
 
   /** Apply a verified [[exportSnapshotDelta]] directory to a restored
     * table: dest(≡ v1) + delta(v1→v2) ≡ readVersion(v2) — the
-    * incremental half of the u26 restore path. Every shard's
-    * (change_type, rows, `bit_xor`) fingerprint is re-verified FROM
-    * the files before any commit (one flipped row refuses
-    * whole-or-nothing), deletes match by FULL-row fingerprint and
-    * inserts dedup by key (a changed row is a delete+insert pair on
-    * one key — see the inline note for why key-scoped deletes would
-    * break re-apply), and the whole apply is ONE
-    * [[AtomicTable.overwritePartitions]] commit over the touched
+    * incremental half of the u26 restore path. Every shard is
+    * re-verified FROM the files before any commit ([[verifyShards]]:
+    * one flipped row refuses whole-or-nothing), deletes match by
+    * FULL-row fingerprint and inserts dedup by key (a changed row is a
+    * delete+insert pair on one key — see the inline note for why
+    * key-scoped deletes would break re-apply), and the whole apply is
+    * ONE [[AtomicTable.overwritePartitions]] commit over the touched
     * partitions — crash-atomic, untouched partitions never read.
     * Re-applying is a zero-change no-op that commits nothing.
     *
-    * BOTH ENDPOINTS ARE VERIFIED, not taken on faith: the manifest
-    * carries whole-table (rows, `bit_xor`) fingerprints of v1 and v2,
-    * and the apply (a) refuses up front when `dest` does not equal v1
-    * (a diverged restore — wrong version, partial vacuum, stray write
-    * — would otherwise absorb deletes that match nothing and dedup
-    * inserts against the wrong rows, silently landing a mongrel
-    * table), (b) recognizes a `dest` already at v2 as an
+    * BOTH ENDPOINTS ARE VERIFIED, not taken on faith: the apply
+    * (a) refuses up front when `dest` does not equal the manifest's v1
+    * fingerprint (a diverged restore — wrong version, partial vacuum,
+    * stray write — would otherwise absorb deletes that match nothing
+    * and dedup inserts against the wrong rows, silently landing a
+    * mongrel table), (b) recognizes a `dest` already at v2 as an
     * already-applied no-op, and (c) computes the would-be result's
     * whole-table fingerprint and requires it to equal v2 BEFORE the
     * commit — whole-or-nothing, same discipline as
@@ -632,7 +704,8 @@ object Warehouse {
     * also catches the duplicate-fingerprint hazard (two dest rows
     * with identical canon values both removed by one delta delete
     * row): over-deletion flips the predicted fingerprint and the
-    * apply refuses instead of committing the loss.
+    * apply refuses instead of committing the loss. The verb's
+    * persists are its own, released when it returns.
     *
     * `canon` must fingerprint the full payload (id alone cannot
     * distinguish a changed row's old and new content). Returns the
@@ -643,49 +716,27 @@ object Warehouse {
                          schema: org.apache.spark.sql.types.StructType,
                          canon: Column, idCol: String): Long = {
     import spark.implicits._
-    val mf = java.nio.file.Paths.get(s"$deltaDir/_MANIFEST.json")
-    require(java.nio.file.Files.exists(mf),
-      s"no _MANIFEST.json under $deltaDir — not a delta-export dir")
-    val pat = ("""\{"shard":(-?\d+),"change_type":"(\w+)",""" +
-      """"n_rows":(-?\d+),"content_xor":(-?\d+)\}""").r
-    val epPat =
-      """\{"endpoint":"(v[12])","n_rows":(-?\d+),"content_xor":(-?\d+)\}""".r
-    val lines = java.nio.file.Files.readAllLines(mf).toArray
-      .map(_.toString.trim).filter(_.nonEmpty).toSeq
+    val lines = manifestLines(deltaDir, "a delta-export")
     val endpoints = lines.collect {
-      case epPat(ep, n, x) => ep -> (n.toLong, x.toLong)
+      case EndpointLine(ep, n, x) => ep -> (n.toLong, x.toLong)
     }.toMap
     require(endpoints.contains("v1") && endpoints.contains("v2"),
       s"delta manifest under $deltaDir carries no endpoint " +
         "fingerprints — re-export with the endpoint-verifying exporter")
-    val manifest = lines.filterNot(epPat.matches).map {
-        case pat(sh, ct, n, x) => (sh.toLong, ct, n.toLong, x.toLong)
-        case l => throw new IllegalStateException(
-          s"unparseable delta-manifest line: $l")
+    val manifest =
+      parseLines(lines.filterNot(EndpointLine.matches), "delta-manifest") {
+        case DeltaLine(sh, ct, n, x) => (sh.toLong, ct, n.toLong, x.toLong)
       }
     val withCt = schema.add("change_type",
       org.apache.spark.sql.types.StringType)
     // tiny-handoff fast path: verify + apply scan only the delta dir
     // and the destination tree
-    Adaptive.withTinyPlan(spark, {
-      val cap = Adaptive.MinBytes
-      Adaptive.dirBytesAtMost(deltaDir, cap) +
-        Adaptive.dirBytesAtMost(dest.root, cap)
-    }) {
+    Adaptive.withTinyPlan(spark,
+      Adaptive.touchedBytes(Seq(deltaDir, dest.root))) {
+    graft.Caches.withCaches { _ =>
     val files = spark.read.schema(withCt).json(deltaDir)
-    val got = files.withColumn("_fp", canon)
-      .groupBy(col("shard").cast("long").as("shard"), col("change_type"))
-      .agg(count(lit(1)).as("n_rows"),
-        expr("bit_xor(_fp)").as("content_xor"))
-      .orderBy("shard", "change_type")
-      .as[(Long, String, Long, Long)].collect().toSeq
-    if (got != manifest) {
-      val bad = (manifest.toSet diff got.toSet) ++
-        (got.toSet diff manifest.toSet)
-      throw new IllegalStateException(
-        "delta fingerprint mismatch — refusing to apply; " +
-          s"divergent shards (expected/found): ${bad.toSeq.sorted}")
-    }
+    verifyShards(files, canon, manifest,
+      "delta fingerprint mismatch — refusing to apply", "change_type")
     // endpoint gate: one whole-table scan of dest decides whether this
     // apply is (a) already done (dest ≡ v2 → no-op), (b) legal
     // (dest ≡ v1 → proceed), or (c) a diverged restore (→ refuse
@@ -693,10 +744,7 @@ object Warehouse {
     val (v1n, v1x) = endpoints("v1")
     val (v2n, v2x) = endpoints("v2")
     val (destN, destX) =
-      if (!dest.hasData) (0L, 0L)
-      else dest.read().withColumn("_fp", canon)
-        .agg(count(lit(1)), coalesce(expr("bit_xor(_fp)"), lit(0L)))
-        .as[(Long, Long)].head()
+      if (!dest.hasData) (0L, 0L) else frameFp(dest.read(), canon)
     if (destN == v2n && destX == v2x) return 0L
     if (destN != v1n || destX != v1x)
       throw new IllegalStateException(
@@ -728,13 +776,9 @@ object Warehouse {
     // pre-delete view would silently drop the new content
     val fresh = ins.join(kept.select(col(idCol)).distinct(),
       Seq(idCol), "left_anti")
-    def cntXor(df: DataFrame): (Long, Long) =
-      df.withColumn("_fp", canon)
-        .agg(count(lit(1)), coalesce(expr("bit_xor(_fp)"), lit(0L)))
-        .as[(Long, Long)].head()
-    val (existN, existX) = cntXor(existing)
-    val (keptN, keptX) = cntXor(kept)
-    val (freshN, freshX) = cntXor(fresh)
+    val (existN, existX) = frameFp(existing, canon)
+    val (keptN, keptX) = frameFp(kept, canon)
+    val (freshN, freshX) = frameFp(fresh, canon)
     // predict the post-apply whole-table fingerprint WITHOUT a second
     // full scan: post = (dest \ existing) ∪ kept ∪ fresh, and kept ⊆
     // existing, so xor(post) = xor(dest) ^ xor(existing) ^ xor(kept)
@@ -753,6 +797,7 @@ object Warehouse {
     if (nDel + nIns == 0) return 0L
     dest.overwritePartitions(touched, kept.unionByName(fresh))
     nDel + nIns
+    }
     }
   }
 
@@ -781,8 +826,9 @@ object Warehouse {
 
   /** Ship a serving ANN index to another cluster: export the LIVE
     * view (base ∪ delta rows minus tombstones, exactly what
-    * [[ivfPqServe]] selects from) as hash-sharded JSONL plus the
-    * FROZEN model files, each fingerprinted in `_MANIFEST.json`.
+    * [[ivfPqServe]] selects from) in the snapshot wire format
+    * ([[writeShards]], rows fingerprinted by [[indexRowFp]]) plus the
+    * FROZEN model files.
     *
     * Codes are deliberately NOT shipped: cells and PQ codes are pure
     * functions of (frozen model × vector), so the import re-derives
@@ -795,10 +841,6 @@ object Warehouse {
     * (physically clean, answers bit-identical — `n30_index_ship`
     * grades both serves against one oracle).
     *
-    *  - shard = salted 60-bit md5 of the id, mod `shards` — the same
-    *    deterministic discipline as [[exportSnapshot]];
-    *  - per-shard (row count, order-independent `bit_xor` of
-    *    [[indexRowFp]]) recomputed FROM the exported files;
     *  - model files (`centroids.txt`, `codebooks.txt`, `pqmeta.txt`)
     *    copied byte-for-byte as `_MODEL_*` with md5 digests in the
     *    manifest — a flipped codebook byte refuses at import exactly
@@ -814,22 +856,14 @@ object Warehouse {
   def exportPqIndexSnapshot(spark: SparkSession, root: String,
                             outDir: String, shards: Int, salt: String,
                             idCol: String = "vec_id"): DataFrame = {
-    require(shards > 0, "shards must be positive")
-    require(!salt.contains("#"), "snapshot salt must not contain '#'")
+    requireShardArgs(shards, salt)
     val r = resolveIndexRoot(root)
     val live = readEmbeddingsByCellLive(spark, root, idCol).drop("cell")
     val payload = live.columns.filterNot(_ == idCol).toSeq
-    live.withColumn("shard",
-        graft.functions.MarketFunctions.md5Hash60(
-          concat(lit(s"$salt#"), col(idCol).cast("string"))) % shards)
-      .write.mode(SaveMode.Overwrite).partitionBy("shard").json(outDir)
     import spark.implicits._
-    val rows = spark.read.schema(live.schema).json(outDir)
-      .withColumn("_fp", indexRowFp(salt, idCol, payload))
-      .groupBy(col("shard").cast("long").as("shard"))
-      .agg(count(lit(1)).as("n_rows"),
-        expr("bit_xor(_fp)").as("content_xor"))
-      .orderBy("shard").as[(Long, Long, Long)].collect().toSeq
+    val rows = writeShards(live, outDir, shards, salt, idCol,
+      indexRowFp(salt, idCol, payload)).as[(Long, Long, Long)]
+      .collect().toSeq
     val modelLines = Seq("centroids.txt", "codebooks.txt", "pqmeta.txt")
       .flatMap { f =>
         val p = java.nio.file.Paths.get(s"$r/$f")
@@ -838,21 +872,15 @@ object Warehouse {
           val bytes = java.nio.file.Files.readAllBytes(p)
           java.nio.file.Files.write(
             java.nio.file.Paths.get(s"$outDir/_MODEL_$f"), bytes)
-          Some(s"""{"model":${jsonStr(f)},"md5":"${md5Hex(bytes)}"}""")
+          Some(jsonLine("model" -> f, "md5" -> md5Hex(bytes)))
         }
       }
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$outDir/_PROVENANCE.json"),
-      s"""{"index":${jsonStr(root)},"version":${jsonStr(r)},""" +
-        s""""salt":${jsonStr(salt)},"shards":$shards,""" +
-        s""""id_col":${jsonStr(idCol)},""" +
-        s""""schema":${jsonStr(live.schema.toDDL)}}\n""")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$outDir/_MANIFEST.json"),
-      (modelLines ++ rows.map { case (sh, n, x) =>
-        s"""{"shard":$sh,"n_rows":$n,"content_xor":$x}"""
-      }).mkString("", "\n", "\n"))
-    rows.toDF("shard", "n_rows", "content_xor")
+    writeSidecar(outDir, "_PROVENANCE.json", Seq(jsonLine(
+      "index" -> root, "version" -> r, "salt" -> salt, "shards" -> shards,
+      "id_col" -> idCol, "schema" -> live.schema.toDDL)))
+    writeSidecar(outDir, "_MANIFEST.json",
+      modelLines ++ fpLines(ShardCols, rows))
+    rows.toDF(ShardCols: _*)
   }
 
   /** The receiving half of [[exportPqIndexSnapshot]]: verify every
@@ -862,9 +890,9 @@ object Warehouse {
     *
     *  - model `_MODEL_*` files are digest-checked against the
     *    manifest BEFORE anything is read through them;
-    *  - per-shard (rows, `bit_xor`) fingerprints are recomputed from
-    *    the files under the provenance schema — one changed, added,
-    *    or dropped row refuses the whole import;
+    *  - the shards are verified ([[verifyShards]]) under the
+    *    provenance schema and salt — one changed, added, or dropped
+    *    row refuses the whole import;
     *  - the index builds into a fresh VERSION directory
     *    (`destRoot/vN`) and the `CURRENT` pointer flips only after a
     *    final whole-corpus fingerprint check of the built version —
@@ -886,34 +914,20 @@ object Warehouse {
                             vecCol: String = "embedding",
                             failpoint: String => Unit = _ => ()): Long = {
     import spark.implicits._
-    val mf = java.nio.file.Paths.get(s"$exportDir/_MANIFEST.json")
-    require(java.nio.file.Files.exists(mf),
-      s"no _MANIFEST.json under $exportDir — not an index-export dir")
+    val lines = manifestLines(exportDir, "an index-export")
     val pv = java.nio.file.Paths.get(s"$exportDir/_PROVENANCE.json")
     require(java.nio.file.Files.exists(pv),
       s"no _PROVENANCE.json under $exportDir — not an index-export dir")
     val prov = java.nio.file.Files.readString(pv)
-    def provStr(k: String): String = {
-      val m = (s""""$k":"((?:[^"\\\\]|\\\\.)*)"""").r
-        .findFirstMatchIn(prov)
-      require(m.isDefined, s"provenance header missing $k")
-      m.get.group(1).replace("\\\"", "\"").replace("\\\\", "\\")
-    }
-    val salt = provStr("salt")
+    val salt = provField(prov, "salt")
     val schema = org.apache.spark.sql.types.StructType
-      .fromDDL(provStr("schema"))
-    val modelPat = """\{"model":"([^"]+)","md5":"([0-9a-f]+)"\}""".r
-    val shardPat =
-      """\{"shard":(-?\d+),"n_rows":(-?\d+),"content_xor":(-?\d+)\}""".r
-    val lines = java.nio.file.Files.readAllLines(mf).toArray
-      .map(_.toString.trim).filter(_.nonEmpty).toSeq
+      .fromDDL(provField(prov, "schema"))
     val modelDigests = lines.collect {
-      case modelPat(f, d) => f -> d }.toMap
-    val manifest = lines.filterNot(modelPat.matches).map {
-      case shardPat(sh, n, x) => (sh.toLong, n.toLong, x.toLong)
-      case l => throw new IllegalStateException(
-        s"unparseable index-manifest line: $l")
-    }
+      case ModelLine(f, d) => f -> d }.toMap
+    val manifest =
+      parseLines(lines.filterNot(ModelLine.matches), "index-manifest") {
+        case ShardLine(sh, n, x) => (sh.toLong, n.toLong, x.toLong)
+      }
     require(modelDigests.contains("centroids.txt") &&
       modelDigests.contains("codebooks.txt"),
       "index manifest carries no model digests — not a full handoff")
@@ -947,25 +961,12 @@ object Warehouse {
     val payload = schema.fieldNames.filterNot(_ == idCol).toSeq
     val fp = indexRowFp(salt, idCol, payload)
     val files = spark.read.schema(schema).json(exportDir)
-    val got = files.withColumn("_fp", fp)
-      .groupBy(col("shard").cast("long").as("shard"))
-      .agg(count(lit(1)).as("n_rows"),
-        expr("bit_xor(_fp)").as("content_xor"))
-      .orderBy("shard").as[(Long, Long, Long)].collect().toSeq
-    if (got != manifest) {
-      val bad = (manifest.toSet diff got.toSet) ++
-        (got.toSet diff manifest.toSet)
-      throw new IllegalStateException(
-        "index snapshot fingerprint mismatch — refusing to import; " +
-          s"divergent shards (expected/found): ${bad.toSeq.sorted}")
-    }
+    verifyShards(files, fp, manifest,
+      "index snapshot fingerprint mismatch — refusing to import")
     val wantRows = manifest.map(_._2).sum
     val wantXor = manifest.map(_._3).foldLeft(0L)(_ ^ _)
     def liveFp(root: String): (Long, Long) =
-      readEmbeddingsByCellLive(spark, root, idCol).drop("cell")
-        .withColumn("_fp", fp)
-        .agg(count(lit(1)), coalesce(expr("bit_xor(_fp)"), lit(0L)))
-        .as[(Long, Long)].head()
+      frameFp(readEmbeddingsByCellLive(spark, root, idCol).drop("cell"), fp)
     val serving =
       java.nio.file.Files.exists(
         java.nio.file.Paths.get(s"$destRoot/CURRENT")) ||
@@ -1011,10 +1012,8 @@ object Warehouse {
   def pqTombstoneTable(spark: SparkSession, root: String,
                        failpoint: String => Unit = _ => (),
                        idCol: String = "vec_id"): AtomicTable =
-    AtomicTable(spark, s"${resolveIndexRoot(root)}/delta_tombstones",
-      partCol = "cell",
-      defaultKeys = Seq(idCol), failpoint = failpoint,
-      partType = _.toInt)
+    cellTable(spark, s"${resolveIndexRoot(root)}/delta_tombstones", idCol,
+      failpoint)
 
   /** Delete `ids` from the index's serving view. Appends
     * (id, cell, upto = Long.MaxValue) tombstone marks — no base or
@@ -1067,10 +1066,7 @@ object Warehouse {
             .lastCommittedBatch(stream).exists(_ >= batchId)) return 0L
     }
     // tiny-verb fast path (guide §2): see [[Adaptive.withTinyPlan]]
-    Adaptive.withTinyPlan(spark, {
-      val cap = Adaptive.MinBytes
-      Adaptive.dirBytesAtMost(r, cap) + Adaptive.planBytes(ids)
-    }) {
+    Adaptive.withTinyPlan(spark, Adaptive.touchedBytes(Seq(r), ids)) {
     // cells come from the committed (raw) view so the tombstone lands
     // in the partition every probe of that cell will read; an id held
     // in BOTH base and a delta shard (a re-append) yields two rows, so
@@ -1178,10 +1174,7 @@ object Warehouse {
     // tiny-verb fast path (guide §2): the update's plans are bounded
     // by the index tree + the batch — when both are provably small,
     // AQE's per-exchange stage jobs are pure driver overhead
-    Adaptive.withTinyPlan(spark, {
-      val cap = Adaptive.MinBytes
-      Adaptive.dirBytesAtMost(r, cap) + Adaptive.planBytes(batch)
-    }) {
+    Adaptive.withTinyPlan(spark, Adaptive.touchedBytes(Seq(r), batch)) {
     // the verb's persists live and die with the verb
     graft.Caches.withCaches { _ =>
       updateInPqIndexBody(spark, root, r, t, batch, idCol, vecCol, txn,
@@ -1495,8 +1488,7 @@ object Warehouse {
     // published nothing; re-read and fold again — the appended shard
     // simply joins the merge. Bounded so a pathological append storm
     // surfaces instead of spinning.
-    Adaptive.withTinyPlan(spark,
-      Adaptive.dirBytesAtMost(root, Adaptive.MinBytes)) {
+    Adaptive.withTinyPlan(spark, Adaptive.touchedBytes(Seq(root))) {
     AtomicTable.retryOnConflict(attempts) {
       val emb = pqDeltaEmbTable(spark, root, failpoint)
       val codes = pqDeltaCodeTable(spark, root, failpoint)
@@ -1593,41 +1585,53 @@ object Warehouse {
                        vecCol: String = "embedding"): Option[String] = {
     // tiny-index fast path: drift report, retrain, and rebuild are
     // all bounded by the index tree
-    Adaptive.withTinyPlan(spark,
-      Adaptive.dirBytesAtMost(root, Adaptive.MinBytes)) {
+    Adaptive.withTinyPlan(spark, Adaptive.touchedBytes(Seq(root))) {
     // heal a predecessor that crashed between its flip and its sweep
     sweepSupersededIndexDeltas(spark, root, idCol, vecCol)
     if (!hasPqDeltas(spark, root)) return None
     val status = indexDriftReport(spark, root)
       .select("status").head().getString(0)
     if (status != "rebuild") return None
+    Some(flipToLiveRebuild(spark, root, idCol, vecCol, Some(trainIters)))
+    }
+  }
+
+  /** The build-and-flip both index rebuilds share ([[rebuildIfDrifted]],
+    * [[compactPqIndex]]): persist the LIVE view — where tombstoned and
+    * superseded rows die physically — build it into a freshly claimed
+    * version under the serving model, carry the replay fences, flip
+    * `CURRENT`, then sweep shards whose commit completed in the old
+    * version between the corpus snapshot and the flip (invisible to
+    * both the new base and the writer fence). `retrainIters` None keeps
+    * the frozen centroids and codebooks; Some(n) warm-starts n k-means
+    * iterations from the centroids and retrains the codebooks. The
+    * residual flag carries over either way. Returns the new version.
+    */
+  private def flipToLiveRebuild(spark: SparkSession, root: String,
+                                idCol: String, vecCol: String,
+                                retrainIters: Option[Int]): String = {
     val cents = readEmbeddingCentroids(root)
     val cb = readPqCodebooks(root)
     val residual = readPqResidualFlag(root)
     val (k, dim) = (cents.length, cents(0).length)
-    // LIVE view: the rebuild is where tombstoned rows die physically —
-    // the new version re-ingests only live rows and starts
-    // tombstone-free
     val corpus = readEmbeddingsByCellLive(spark, root, idCol)
       .drop("cell").persist()
     try {
-      val retrained = graft.pipelines.Similarity.trainIvfCentroids(
-        corpus, vecCol, k, dim, iters = trainIters, seed = Some(cents))
+      val (newCents, newCb) = retrainIters.fold((cents, Option(cb))) { n =>
+        (graft.pipelines.Similarity.trainIvfCentroids(corpus, vecCol, k,
+          dim, iters = n, seed = Some(cents)), None)
+      }
       val next = claimNextIndexVersion(root)
       writePqIndex(corpus, s"$root/$next", k, dim,
         m = cb.length, ks = cb(0).length, idCol = idCol,
-        vecCol = vecCol, centroids = Some(retrained),
+        vecCol = vecCol, centroids = Some(newCents), codebooks = newCb,
         residual = residual)
       carryIndexFences(spark, resolveIndexRoot(root), s"$root/$next",
         idCol)
       flipIndexCurrent(root, next)
-      // shards whose commit completed in the old version between the
-      // corpus snapshot and the flip are invisible to both the new
-      // base and the writer fence — fold them forward now
       sweepSupersededIndexDeltas(spark, root, idCol, vecCol)
-      Some(next)
+      next
     } finally corpus.unpersist(blocking = false)
-    }
   }
 
   /** Next version = max existing v<N> + 1, claimed by EXCLUSIVE
@@ -1690,28 +1694,10 @@ object Warehouse {
                      vecCol: String = "embedding"): String = {
     // tiny-index fast path (guide §2): the whole rebuild is bounded
     // by the index tree — see [[Adaptive.withTinyPlan]]
-    Adaptive.withTinyPlan(spark,
-      Adaptive.dirBytesAtMost(root, Adaptive.MinBytes)) {
+    Adaptive.withTinyPlan(spark, Adaptive.touchedBytes(Seq(root))) {
     // heal a predecessor that crashed between its flip and its sweep
     sweepSupersededIndexDeltas(spark, root, idCol, vecCol)
-    val cents = readEmbeddingCentroids(root)
-    val cb = readPqCodebooks(root)
-    val residual = readPqResidualFlag(root)
-    val (k, dim) = (cents.length, cents(0).length)
-    val corpus = readEmbeddingsByCellLive(spark, root, idCol)
-      .drop("cell").persist()
-    try {
-      val next = claimNextIndexVersion(root)
-      writePqIndex(corpus, s"$root/$next", k, dim,
-        m = cb.length, ks = cb(0).length, idCol = idCol,
-        vecCol = vecCol, centroids = Some(cents),
-        codebooks = Some(cb), residual = residual)
-      carryIndexFences(spark, resolveIndexRoot(root), s"$root/$next",
-        idCol)
-      flipIndexCurrent(root, next)
-      sweepSupersededIndexDeltas(spark, root, idCol, vecCol)
-      next
-    } finally corpus.unpersist(blocking = false)
+    flipToLiveRebuild(spark, root, idCol, vecCol, None)
     }
   }
 
@@ -1730,12 +1716,10 @@ object Warehouse {
     */
   private def carryIndexFences(spark: SparkSession, oldRoot: String,
                                newRoot: String, idCol: String): Unit = {
-    def tbl(r: String, name: String): AtomicTable =
-      AtomicTable(spark, s"$r/$name", partCol = "cell",
-        defaultKeys = Seq(idCol), partType = _.toInt)
     Seq("delta_emb", "delta_codes", "delta_tombstones").foreach { n =>
-      val marks = tbl(oldRoot, n).txnMarks
-      if (marks.nonEmpty) tbl(newRoot, n).carryTxnMarks(marks)
+      val marks = cellTable(spark, s"$oldRoot/$n", idCol).txnMarks
+      if (marks.nonEmpty)
+        cellTable(spark, s"$newRoot/$n", idCol).carryTxnMarks(marks)
     }
   }
 
@@ -1751,8 +1735,7 @@ object Warehouse {
                           idCol: String = "vec_id"): Double =
     // runs per micro-batch in the auto-compact stream: the two counts
     // scan only the narrow codes tables — tiny-index fast path applies
-    Adaptive.withTinyPlan(spark,
-      Adaptive.dirBytesAtMost(root, Adaptive.MinBytes)) {
+    Adaptive.withTinyPlan(spark, Adaptive.touchedBytes(Seq(root))) {
       val all = readPqCodesAll(spark, root).count()
       if (all == 0L) 0.0
       else 1.0 - readPqCodesLive(spark, root, idCol).count().toDouble / all
@@ -1799,15 +1782,13 @@ object Warehouse {
     val prevRoot = if (n <= 1L) root else s"$root/v${n - 1}"
     // construct against the superseded path DIRECTLY — pqDeltaEmbTable
     // would re-resolve to the current version
-    val prevEmb = AtomicTable(spark, s"$prevRoot/delta_emb",
-      partCol = "cell", defaultKeys = Seq(idCol), partType = _.toInt)
+    val prevEmb = cellTable(spark, s"$prevRoot/delta_emb", idCol)
     if (!prevEmb.hasData) return 0L
     val served = readPqCodesAll(spark, root).select(col(idCol))
     // the superseded version's tombstones still bind: a late shard row
     // that was deleted before the flip is absent from the new base BY
     // DESIGN, not stranded — folding it forward would resurrect it
-    val prevTomb = AtomicTable(spark, s"$prevRoot/delta_tombstones",
-      partCol = "cell", defaultKeys = Seq(idCol), partType = _.toInt)
+    val prevTomb = cellTable(spark, s"$prevRoot/delta_tombstones", idCol)
     val deadIds =
       if (!prevTomb.hasData) served.limit(0)
       else prevTomb.read().select(col(idCol))
@@ -1933,11 +1914,7 @@ object Warehouse {
     // tiny-window fast path (guide §2): everything a sync can touch is
     // the two trees on disk — when both are provably small, AQE's
     // per-exchange stage jobs dominate the window's wall clock
-    Adaptive.withTinyPlan(spark, {
-      val cap = Adaptive.MinBytes
-      Adaptive.dirBytesAtMost(r, cap) +
-        Adaptive.dirBytesAtMost(src.root, cap)
-    }) {
+    Adaptive.withTinyPlan(spark, Adaptive.touchedBytes(Seq(r, src.root))) {
     // every persist below (and the update verb's) is the window's own:
     // released when the sync returns, so an unattended CDC stream holds
     // no cached blocks between ticks

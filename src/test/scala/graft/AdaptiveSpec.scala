@@ -74,4 +74,32 @@ class AdaptiveSpec extends AnyFunSuite with StopsStreams {
       v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     }
   }
+
+  test("touchedBytes: an estimate past Long.MaxValue saturates and never gates tiny") {
+    val spark = TestSpark.spark
+    val aqe = "spark.sql.adaptive.enabled"
+    val shuf = "spark.sql.shuffle.partitions"
+    val root = Files.createTempDirectory("graft_adaptive_sat")
+    Files.write(root.resolve("tiny.bin"), Array.fill[Byte](100)(1))
+    val saved = Seq(aqe, shuf).map(k => k -> spark.conf.getAll.get(k))
+    try {
+      // Range's estimate is 8 bytes × Long.MaxValue rows: past a Long,
+      // so planBytes answers Long.MaxValue, and adding the dir's 100
+      // bytes must not wrap negative. Planning only: no job runs.
+      val huge = spark.range(Long.MaxValue).toDF()
+      assert(Adaptive.planBytes(huge) === Long.MaxValue)
+      val est = Adaptive.touchedBytes(Seq(root.toString), huge)
+      assert(est >= Adaptive.MinBytes)
+      spark.conf.set(aqe, "true")
+      spark.conf.set(shuf, "7")
+      val inside = Adaptive.withTinyPlan(spark, est)(
+        (spark.conf.get(aqe), spark.conf.get(shuf)))
+      assert(inside === (("true", "7")))
+    } finally {
+      saved.foreach { case (k, v) =>
+        v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+      }
+      deleteTree(root.toFile)
+    }
+  }
 }

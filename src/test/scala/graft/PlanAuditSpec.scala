@@ -18,12 +18,78 @@ class PlanAuditSpec extends AnyFunSuite {
     * The audit inspects static plan SHAPE — partitioning of windows,
     * duplicate frames, join strategy — which AQE only refines at
     * runtime, so auditing the non-adaptive plan is both correct and
-    * strictly stricter.
+    * strictly stricter. The session's AQE setting is restored as it
+    * was (an unset key stays unset).
     */
   private def audited[A](body: => A): A = {
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val aqe = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.getAll.get(aqe)
+    spark.conf.set(aqe, "false")
     try body
-    finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    finally prev.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
+  }
+
+  /** What each guard found, from ONE pass over the registered queries. */
+  private case class Findings(joins: Seq[String],
+                              windowDups: Seq[(String, Int)],
+                              globalWindows: Seq[String],
+                              nonScalar: Seq[String])
+
+  /** Build every query once on sf0.001 with AQE off and run all four
+    * guards on that one frame and plan; each test asserts its own list.
+    * Plan-only: building the DataFrame never executes the query, but a
+    * handful of queries run side-effecting setup (file writes,
+    * streaming) inside the builder — they still only PLAN the returned
+    * frame here. A query that fails to build or plan is an offender to
+    * the join and global-window guards (swallowing the failure would
+    * report the most-broken queries as clean) and to the output guard
+    * when its schema is unavailable; the frame guard counts it 0.
+    */
+  private lazy val findings: Findings = audited {
+    import org.apache.spark.sql.execution.window.{WindowExec,
+      WindowGroupLimitExec}
+    import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
+    val dir = "/root/testdata/sf0.001"
+    def attempt[A](a: => A): Either[Throwable, A] =
+      try Right(a) catch { case e: Throwable => Left(e) }
+    val perQuery = SparkEntry.queries.keys.toSeq.sorted.map { name =>
+      val df = attempt(SparkEntry.queries(name)(spark, dir))
+      val plan = df.flatMap(d => attempt(d.queryExecution.executedPlan))
+      val joins = plan.flatMap(p => attempt(p.toString)).fold(_ => true,
+        s => s.contains("CartesianProduct") ||
+          (s.contains("BroadcastNestedLoopJoin") &&
+            !singleRowCross.contains(name)))
+      // window expressions are extracted per TEXTUAL occurrence, so
+      // count the canonicalized duplicates per Window operator
+      val dups = plan.flatMap(p => attempt(p.collect {
+        case w: WindowExec =>
+          val canon = w.windowExpression.map {
+            case a: org.apache.spark.sql.catalyst.expressions.Alias =>
+              a.child.canonicalized
+            case e => e.canonicalized
+          }
+          canon.size - canon.distinct.size
+      }.sum)).getOrElse(0)
+      val global = plan.flatMap(p => attempt(p.collect {
+        case w: WindowExec if w.partitionSpec.isEmpty => w.toString
+        case w: WindowGroupLimitExec if w.partitionSpec.isEmpty =>
+          w.toString
+      }.nonEmpty)).getOrElse(true)
+      val nested = df.flatMap(d => attempt(d.schema.fields.toSeq.collect {
+        case f if f.dataType.isInstanceOf[ArrayType] ||
+            f.dataType.isInstanceOf[MapType] ||
+            f.dataType.isInstanceOf[StructType] =>
+          s"$name.${f.name}: ${f.dataType.simpleString}"
+      })).fold(e => Seq(s"$name: schema unavailable (${e.getMessage})"),
+        identity)
+      graft.Caches.releaseAll()
+      (name, joins, dups, global, nested)
+    }
+    Findings(
+      perQuery.collect { case (n, true, _, _, _) => n },
+      perQuery.collect { case (n, _, d, _, _) if d > 0 => n -> d },
+      perQuery.collect { case (n, _, _, true, _) => n },
+      perQuery.flatMap(_._5))
   }
 
   // deliberate bounded cross joins: a broadcast single row (ANN query
@@ -64,24 +130,7 @@ class PlanAuditSpec extends AnyFunSuite {
     "t43_sampled_family_recall") // t42's aggs × 1-row sample-size agg
 
   test("no query plans a cartesian or unbounded nested-loop join") {
-    val dir = "/root/testdata/sf0.001"
-    val offenders = audited { SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-      // plan-only: building the DataFrame never executes the query, but
-      // a handful of queries run side-effecting setup (file writes,
-      // streaming) inside the builder — they still only PLAN the
-      // returned frame here
-      val plan =
-        try SparkEntry.queries(name)(spark, dir)
-          .queryExecution.executedPlan.toString
-        catch { case e: Throwable => s"PLANNING FAILED: ${e.getMessage}" }
-      graft.Caches.releaseAll()
-      val bad =
-        plan.contains("CartesianProduct") ||
-          (plan.contains("BroadcastNestedLoopJoin") &&
-            !singleRowCross.contains(name)) ||
-          plan.startsWith("PLANNING FAILED")
-      if (bad) Some(name) else None
-    } }
+    val offenders = findings.joins
     assert(offenders.isEmpty, s"scale-unsafe plans: $offenders")
   }
 
@@ -94,23 +143,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // count guard + divisor); a large one means an operator should
     // stage its window attributes with withColumn before referencing
     // them. The bound is per-query, canonicalized-distinct.
-    val dir = "/root/testdata/sf0.001"
-    val report = audited { SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-      val dups =
-        try SparkEntry.queries(name)(spark, dir)
-          .queryExecution.executedPlan.collect {
-            case w: org.apache.spark.sql.execution.window.WindowExec =>
-              val canon = w.windowExpression.map {
-                case a: org.apache.spark.sql.catalyst.expressions.Alias =>
-                  a.child.canonicalized
-                case e => e.canonicalized
-              }
-              canon.size - canon.distinct.size
-          }.sum
-        catch { case _: Throwable => 0 } // planning failures: first guard's job
-      graft.Caches.releaseAll()
-      if (dups > 0) Some(name -> dups) else None
-    } }
+    val report = findings.windowDups
     val offenders = report.filter(_._2 > 3)
     assert(offenders.isEmpty,
       s"pathological duplicate window frames: $offenders — stage the " +
@@ -119,22 +152,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("no query plans an unpartitioned (single-task) Window") {
-    val dir = "/root/testdata/sf0.001"
-    val offenders = audited { SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-      // a query that fails to PLAN is an offender too — swallowing the
-      // failure would report the most-broken queries as window-clean
-      val bad =
-        try SparkEntry.queries(name)(spark, dir)
-          .queryExecution.executedPlan.collect {
-            case w: org.apache.spark.sql.execution.window.WindowExec
-              if w.partitionSpec.isEmpty => w.toString
-            case w: org.apache.spark.sql.execution.window.WindowGroupLimitExec
-              if w.partitionSpec.isEmpty => w.toString
-          }
-        catch { case e: Throwable => Seq(s"PLANNING FAILED: ${e.getMessage}") }
-      graft.Caches.releaseAll()
-      if (bad.nonEmpty) Some(name) else None
-    } }
+    val offenders = findings.globalWindows
     assert(offenders.isEmpty,
       s"single-task global Window in: $offenders — the whole ordered " +
         "stream funnels through one partition at scale")
@@ -147,21 +165,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // local gate saw). Nested values must be flattened at the query
     // boundary (array_join / to_json); the operator APIs underneath
     // may keep their natural nested shapes.
-    import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
-    val dir = "/root/testdata/sf0.001"
-    val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-      val bad =
-        try SparkEntry.queries(name)(spark, dir).schema.fields.collect {
-          case f if f.dataType.isInstanceOf[ArrayType] ||
-              f.dataType.isInstanceOf[MapType] ||
-              f.dataType.isInstanceOf[StructType] =>
-            s"$name.${f.name}: ${f.dataType.simpleString}"
-        }.toSeq
-        catch { case e: Throwable =>
-          Seq(s"$name: schema unavailable (${e.getMessage})") }
-      graft.Caches.releaseAll()
-      bad
-    }
+    val offenders = findings.nonScalar
     assert(offenders.isEmpty,
       s"non-scalar query outputs (driver cannot hash them): $offenders")
   }

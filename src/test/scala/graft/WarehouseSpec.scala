@@ -581,8 +581,24 @@ class WarehouseSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("fingerprint mismatch"))
     assert(!dest2.hasData, "a refused import must commit nothing")
+    // a manifest line of no known shape refuses, nothing committed
+    val out2 = Files.createTempDirectory("graft_imp_out2").toString
+    Warehouse.exportSnapshot(spark, tbl, 1L, out2, 4, "s", "doc_id", canon)
+    appendManifestLine(out2, "{\"shard\":0,\"n_rows\":}")
+    val dest3 = graft.sources.DocTable(spark,
+      Files.createTempDirectory("graft_imp_dst3").toString)
+    val exLine = intercept[IllegalStateException] {
+      Warehouse.importSnapshot(spark, out2, dest3, docs.schema, canon)
+    }
+    assert(exLine.getMessage.contains("unparseable manifest line"))
+    assert(!dest3.hasData, "a refused import must commit nothing")
     graft.Caches.releaseAll()
   }
+
+  private def appendManifestLine(dir: String, line: String): Unit =
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$dir/_MANIFEST.json"), line + "\n",
+      java.nio.file.StandardOpenOption.APPEND)
 
   test("snapshot delta: restore(v1) + delta(v1,v2) equals readVersion(v2) " +
     "row-for-row; tampered delta refuses with nothing committed") {
@@ -604,9 +620,13 @@ class WarehouseSpec extends AnyFunSuite {
     val dest = graft.sources.DocTable(spark,
       Files.createTempDirectory("graft_sd_dst").toString)
     Warehouse.importSnapshot(spark, full, dest, docs.schema, canon)
+    // the apply's persists are its own: released when it returns
+    def cachedRdds = spark.sparkContext.getPersistentRDDs.size
+    val cached0 = cachedRdds
     val applied = Warehouse.applySnapshotDelta(spark, inc, dest,
       docs.schema, canon, "doc_id")
     assert(applied > 0)
+    assert(cachedRdds === cached0, "an apply must release its persists")
     val want = tbl.readVersion(2L).select(docs.columns.map(col): _*)
       .orderBy("doc_id").collect().toSeq
     assert(dest.read().select(docs.columns.map(col): _*)
@@ -617,6 +637,7 @@ class WarehouseSpec extends AnyFunSuite {
     assert(Warehouse.applySnapshotDelta(spark, inc, dest, docs.schema,
       canon, "doc_id") === 0L)
     assert(dest.version === v)
+    assert(cachedRdds === cached0, "a re-apply must release its persists")
     // the post-apply whole-table fingerprint equals the manifest's v2
     // endpoint line — the endpoint the apply verified pre-commit
     val epPat =
@@ -668,6 +689,17 @@ class WarehouseSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("fingerprint mismatch"))
     assert(dest2.version === v2pre,
       "a refused apply must commit nothing")
+    // a manifest line of no known shape refuses, nothing committed
+    val inc2 = Files.createTempDirectory("graft_sd_inc2").toString
+    Warehouse.exportSnapshotDelta(spark, tbl, 1L, 2L, inc2, 4, "s",
+      "doc_id", canon)
+    appendManifestLine(inc2, "{\"shard\":0,\"change_type\":\"upsert\"}")
+    val exLine = intercept[IllegalStateException] {
+      Warehouse.applySnapshotDelta(spark, inc2, dest2, docs.schema,
+        canon, "doc_id")
+    }
+    assert(exLine.getMessage.contains("unparseable delta-manifest line"))
+    assert(dest2.version === v2pre, "a refused apply must commit nothing")
     graft.Caches.releaseAll()
   }
 
@@ -931,6 +963,23 @@ class WarehouseSpec extends AnyFunSuite {
     intercept[IllegalStateException](
       Warehouse.importPqIndexSnapshot(spark, exp2,
         Files.createTempDirectory("graft_ship_dst5").toString + "/idx"))
+    // a salt with a tab, a quote and a backslash: the provenance header
+    // escapes it, the import decodes it back — and serves equal
+    val exp3 = Files.createTempDirectory("graft_ship_exp3").toString
+    Warehouse.exportPqIndexSnapshot(spark, root, exp3, shards = 3,
+      salt = "t\tq\"b\\s")
+    val dest6 =
+      Files.createTempDirectory("graft_ship_dst6").toString + "/idx"
+    assert(Warehouse.importPqIndexSnapshot(spark, exp3, dest6) === nLive)
+    assert(serve(dest6) === serve(root))
+    // a manifest line of no known shape refuses, nothing flips live
+    appendManifestLine(exp3, "{\"model\":\"x.txt\"}")
+    val dest7 =
+      Files.createTempDirectory("graft_ship_dst7").toString + "/idx"
+    val exLine = intercept[IllegalStateException](
+      Warehouse.importPqIndexSnapshot(spark, exp3, dest7))
+    assert(exLine.getMessage.contains("unparseable index-manifest line"))
+    assert(java.nio.file.Files.notExists(java.nio.file.Paths.get(dest7)))
     graft.Caches.releaseAll()
   }
 
