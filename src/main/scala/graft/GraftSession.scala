@@ -19,4 +19,8 @@ object GraftSession {
       // bare tree instead of formatted per-node detail — observed 18
       // driver-minutes of tree-regex rendering at sf10 without it
       .config("spark.sql.ui.explainMode", "simple")
+      // one index update plans ~80 generated classes; at Spark's default
+      // of 100 cached classes, back-to-back verbs evict each other's
+      // classes and every update and serve recompiles them all
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
 }

@@ -1352,9 +1352,10 @@ object Warehouse {
   }
 
   /** Committed tombstone marks (id, `_upto`) — the ONE
-    * tombstone-manifest read a serve shares across its candidate and
-    * rerank scans; None when the table holds nothing. Marks written
-    * before the `upto` column existed read as full takedowns.
+    * tombstone-manifest read a serving state's build applies to its
+    * joined code and vector rows; None when the table holds nothing.
+    * Marks written before the `upto` column existed read as full
+    * takedowns.
     *
     * AGGREGATED to one row per id (`max(upto)`) — load-bearing, not
     * cosmetic: the mark table is cell-partitioned and a mark's cell
@@ -1410,8 +1411,8 @@ object Warehouse {
     else df.withColumn("_seq", lit(0L))
 
   /** The LIVE serving views: committed base + delta rows minus
-    * tombstones under the versioned-sequence rule — what
-    * [[ivfPqServe]]/[[ivfPqClassify]] select from and what
+    * tombstones under the versioned-sequence rule — the rule
+    * [[ivfPqServe]]'s serving state applies, and what
     * [[rebuildIfDrifted]] re-ingests (so a rebuild materializes
     * updates physically and clears the tombstones semantically).
     * The raw `*All` views stay the COMMITTED multiset — the sweep's
@@ -1919,12 +1920,15 @@ object Warehouse {
     // released when the sync returns, so an unattended CDC stream holds
     // no cached blocks between ticks
     graft.Caches.withCaches { _ =>
-    val feed =
-      if (v0 == 0L) src.read().withColumn("change_type", lit("insert"))
-      else src.changesBetween(v0, v1)
-    val ins = graft.Caches.persist(
-      feed.filter(col("change_type") === "insert")
-        .select(rowCols.map(col): _*))
+    // the feed is read ONCE, by the gate job below: its inserts and its
+    // deletes are both counted there, and every later plan reads the
+    // cached rows
+    val feed = graft.Caches.persist(
+      (if (v0 == 0L) src.read().withColumn("change_type", lit("insert"))
+       else src.changesBetween(v0, v1))
+        .select((rowCols :+ "change_type").map(col): _*))
+    val ins = feed.filter(col("change_type") === "insert")
+      .select(rowCols.map(col): _*)
     val delIds0 = feed.filter(col("change_type") === "delete")
       .select(col(idCol)).distinct()
       .join(ins.select(col(idCol)), Seq(idCol), "left_anti")
@@ -1988,7 +1992,7 @@ object Warehouse {
     val changedP = graft.Caches.persist(changed)
     // ONE action gates the whole window: the ins total (the
     // `unchanged` stat), the keyed-source dup guard, the reinstate
-    // probe, and both verb counts run as one job — their subtrees
+    // probe, and the three verb counts run as one job — their subtrees
     // execute as overlapping stages instead of five sequential
     // driver round-trips (each of which re-paid job-submission and,
     // under AQE, per-stage re-optimization latency)
@@ -1998,6 +2002,7 @@ object Warehouse {
       .unionAll(reinstated.select(lit(3).as("_verb")))
       .unionAll(insNew.select(lit(1).as("_verb")))
       .unionAll(changedP.select(lit(2).as("_verb")))
+      .unionAll(delIds0.select(lit(4).as("_verb")))
       .groupBy(col("_verb")).count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     require(gateCounts.getOrElse(9, 0L) == 0L,
@@ -2046,8 +2051,19 @@ object Warehouse {
         txn = Some((s"$CdcFence#upd", v1)), failpoint = failpoint,
         batchUnique = true) // ins dup-guarded above; changed ⊆ ins
     failpoint("cdc_before_del")
-    val nDel = deleteIdsFromPqIndex(spark, indexRoot, delIds, idCol,
-      txn = Some((s"$CdcFence#del", v1)))
+    // a window that deletes nothing (the first sync's reconcile aside)
+    // commits the verb's fence mark-only, as the verb itself would
+    // after reading the marks and codes to count no newly-dead id
+    val delTxn = (s"$CdcFence#del", v1)
+    val nDel =
+      if (v0 == 0L || gateCounts.getOrElse(4, 0L) > 0L)
+        deleteIdsFromPqIndex(spark, indexRoot, delIds, idCol,
+          txn = Some(delTxn))
+      else {
+        pqTombstoneTable(spark, indexRoot, idCol = idCol)
+          .commitMarkOnly(delTxn)
+        0L
+      }
     failpoint("cdc_before_fence")
     // master fence LAST, mark-only: it witnesses the whole window
     val t2 = pqTombstoneTable(spark, resolveIndexRoot(indexRoot),
@@ -2131,37 +2147,39 @@ object Warehouse {
     }
   }
 
-  /** IVFADC serving against the PERSISTED index — no raw vectors on
-    * the select path: probe cells rank by the layout's own centroids,
-    * the probed cells' codes are ADC-scored (`cand` candidates by
-    * (score desc, id)), and only those ids' raw vectors are scored
-    * again by exact cosine for the top-`topK`. Bit-equal to the inline
-    * composition (`Similarity.batchPqTopKRerank` over a pruned frame)
-    * because codes, probes, and tie-breaks are shared — WarehouseSpec
-    * asserts it. Reads the base index PLUS committed streaming delta
-    * shards ([[writePqDelta]]) under the tombstone marks — an index
-    * with no delta tables serves exactly as before.
+  /** IVFADC serving against the PERSISTED index: probe cells rank by
+    * the layout's own centroids, the probed cells' codes are ADC-scored
+    * (`cand` candidates by (score desc, id)), and only those candidate
+    * rows' raw vectors are scored again by exact cosine for the
+    * top-`topK`. Bit-equal to the inline composition
+    * (`Similarity.batchPqTopKRerank` over a pruned frame) because
+    * codes, probes, and tie-breaks are shared — WarehouseSpec asserts
+    * it. Reads the base index PLUS committed streaming delta shards
+    * ([[writePqDelta]]) under the tombstone marks — an index with no
+    * delta tables serves exactly as before.
     *
-    * SERVING STATE. A serve answers from the index's two live views —
-    * codes (id, cell, code) and vectors (id, cell, vector): base ∪
-    * delta rows with the marks applied ([[liveBySeq]]) — persisted
+    * SERVING STATE. A serve answers from one frame of the index's live
+    * rows (id, cell, code, vector): base ∪ delta codes joined to their
+    * vectors, then the marks applied once ([[liveBySeq]]) — persisted
     * `MEMORY_AND_DISK` once per index state and reused by every serve
-    * of that state. The state is keyed by what the driver reads
-    * without a Spark job: the resolved `CURRENT` version, the
+    * of that state. Each row carries its code and its vector, so the
+    * ADC top-`cand` and the exact re-rank read the same rows and no
+    * join runs at serve time. The state is keyed by what the driver
+    * reads without a Spark job: the resolved `CURRENT` version, the
     * `delta_codes`/`delta_emb`/`delta_tombstones` manifest versions,
     * and the file listing of the base `codes/` and `embeddings/` trees.
     * No verb writes into a built base tree ([[writePqIndex]] refuses a
     * built root), so the listing moves only when the index is deleted
     * and rebuilt at the same path. Every index verb moves the key, so
-    * no serve reads a superseded state. A repeated serve is the ADC
-    * top-`cand` and the rerank over in-memory rows: no file listing,
-    * no schema read, no tombstone aggregation, and a plan whose
-    * generated code does not depend on the query (the probe set and
-    * query vector are literals passed by reference). The first serve after a commit
-    * builds the state inside its own query: it reads EVERY cell of
-    * both views once, not only the probed ones — a serve no longer
-    * prunes its file scan to the probe cells — so it costs a little
-    * more than an unpruned read of the live index.
+    * no serve reads a superseded state. A repeated serve is one Spark
+    * job over in-memory rows: no file listing, no schema read, no
+    * tombstone aggregation, no join, and a plan whose generated code
+    * does not depend on the query (the probe set and query vector are
+    * literals passed by reference). The first serve after a commit
+    * builds the state inside its own query: it reads EVERY cell of the
+    * index once, not only the probed ones — a serve no longer prunes
+    * its file scan to the probe cells — so it costs a little more than
+    * an unpruned read of the live index.
     *
     * The state is owned by the calling thread's [[graft.Caches]]
     * scope: [[graft.Caches.releaseAll]] (or the end of a
@@ -2197,11 +2215,6 @@ object Warehouse {
     // the probe set as one array literal, not an IN list: IN writes
     // each cell id into the generated code, one compile per probe set
     val probed = array_contains(typedLit(probes.toArray), col("cell"))
-    val (codes, vectors) = servingState(spark, root, r, idCol, vecCol)
-    val selected = codes.filter(probed)
-      .select(col(idCol), round(adc, 6).as("pq_score"))
-      .orderBy(col("pq_score").desc, col(idCol).asc).limit(cand)
-      .select(idCol)
     // exact cosine, computed as cosineNative does, except that the
     // query's norm is a per-row fold: a constant norm would be written
     // into the generated code, one compile per query
@@ -2209,14 +2222,15 @@ object Warehouse {
     val cosine = graft.pipelines.Similarity.dotNative(col(vecCol), qv) /
       (graft.pipelines.Similarity.normNative(col(vecCol)) *
         sqrt(aggregate(qv, lit(0.0), (acc, x) => acc + x * x)))
-    vectors.filter(probed)
-      .join(selected, idCol)
+    servingState(spark, root, r, idCol, vecCol).filter(probed)
+      .select(col(idCol), col(vecCol), round(adc, 6).as("pq_score"))
+      .orderBy(col("pq_score").desc, col(idCol).asc).limit(cand)
       .select(col(idCol), round(cosine, 6).as("cosine"))
       .orderBy(col("cosine").desc, col(idCol).asc)
       .limit(topK)
   }
 
-  /** What an index state's serving views are built from, all read on
+  /** What an index state's serving frame is built from, all read on
     * the driver: the resolved version root, the three delta manifest
     * versions, and every base file's (path, size, mtime). The listing
     * is what tells an index deleted and rebuilt at the same path from
@@ -2226,18 +2240,25 @@ object Warehouse {
                                     tombstones: Long,
                                     base: Seq[(String, Long, Long)])
 
-  /** The (codes, vectors) live views of the index state at `r` (the
-    * resolved `root`), persisted in the current [[graft.Caches]] scope
-    * — see [[ivfPqServe]]. Each view carries a per-build tag column
-    * while cached: Spark's cache lookup matches cached data by plan,
-    * and the tag keeps any other plan over the same files (a verb's
-    * live read, or the next state of an index rebuilt at the same path,
-    * whose parquet relation compares equal by path) from being
-    * answered with this state's rows.
+  /** The live rows (id, cell, code, vector) of the index state at `r`
+    * (the resolved `root`), persisted in the current [[graft.Caches]]
+    * scope — see [[ivfPqServe]]. Codes and vectors are paired by one
+    * grouping on (id, `_seq`, cell) before the marks apply, so one
+    * [[tombstoneMarks]] aggregate and one [[liveBySeq]] serve both.
+    * A key keeps all of its codes and one vector: an id held twice at
+    * one sequence (a plain [[writePqDelta]] re-appending a live id,
+    * which leaves a base row and a delta row at `_seq` 0) keeps
+    * exactly as many rows as it has live codes, each carrying one of
+    * its vectors at that key, where an equi-join would pair every code
+    * with every vector. The frame carries a per-build tag column while
+    * cached: Spark's cache lookup matches cached data by plan, and the
+    * tag keeps any other plan over the same files (a verb's live read,
+    * or the next state of an index rebuilt at the same path, whose
+    * parquet relation compares equal by path) from being answered with
+    * this state's rows.
     */
   private def servingState(spark: SparkSession, root: String, r: String,
-                           idCol: String,
-                           vecCol: String): (DataFrame, DataFrame) = {
+                           idCol: String, vecCol: String): DataFrame = {
     val base = Seq("codes", "embeddings").flatMap { d =>
       val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(r, d))
       try walk.iterator().asScala
@@ -2252,17 +2273,22 @@ object Warehouse {
       pqTombstoneTable(spark, r, idCol = idCol).version, base)
     val index = java.nio.file.Paths.get(root).toAbsolutePath.normalize
       .toString
-    lazy val dead = tombstoneMarks(spark, r, idCol)
-    def held(view: String, live: => DataFrame, cols: Seq[String]) =
-      graft.Caches.persistSlot((index, view, idCol, vecCol), key,
-        live.select(cols.map(col) :+
-          lit(java.util.UUID.randomUUID().toString).as("_state"): _*))
-        .drop("_state")
-    (held("codes", liveBySeq(readPqCodesAllSeq(spark, r), dead, idCol),
-        Seq(idCol, "cell", "code")),
-      held("vectors",
-        liveBySeq(readEmbeddingsByCellAllSeq(spark, r), dead, idCol),
-        Seq(idCol, "cell", vecCol)))
+    val pairKey = Seq(idCol, "_seq", "cell").map(col)
+    graft.Caches.persistSlot((index, idCol, vecCol), key, {
+      val paired = readPqCodesAllSeq(spark, r)
+        .select(pairKey :+ col("code"): _*)
+        .unionByName(readEmbeddingsByCellAllSeq(spark, r)
+          .select(pairKey :+ col(vecCol): _*), allowMissingColumns = true)
+        .groupBy(pairKey: _*)
+        .agg(collect_list(col("code")).as("codes"),
+          first(col(vecCol), ignoreNulls = true).as(vecCol))
+        .filter(col(vecCol).isNotNull)
+        .select(pairKey :+ explode(col("codes")).as("code") :+
+          col(vecCol): _*)
+      liveBySeq(paired, tombstoneMarks(spark, r, idCol), idCol)
+        .select(col(idCol), col("cell"), col("code"), col(vecCol),
+          lit(java.util.UUID.randomUUID().toString).as("_state"))
+    }).drop("_state")
   }
 
   /** k-NN majority-vote classification served from the PERSISTED

@@ -49,10 +49,6 @@ object TestSpark {
   lazy val spark: SparkSession = {
     val s = GraftSession.builder(4)
       .appName("graft-tests")
-      // one index update plans ~80 generated classes; at Spark's default
-      // of 100 cached classes, back-to-back verbs evict each other's
-      // classes and every update and serve recompiles them all
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
       .getOrCreate()
